@@ -155,8 +155,8 @@ def connected_components(
         #
         # ONE-aggregation form (optimization round 12; replaces the
         # m-join test, whose plan carried an aggregation plus two joins
-        # = three exchanges per round): per node, (min v, max v, min and
-        # max of SMALLER neighbors). Edge-consistency equivalent —
+        # = three exchanges per round): per node, (max v, min and max of
+        # SMALLER neighbors). Edge-consistency equivalent —
         # a node is bad iff it has both a smaller and a larger neighbor
         # (some edge needs its min to be itself while another forces it
         # lower), or two DISTINCT smaller neighbors (the larger
@@ -164,7 +164,6 @@ def connected_components(
         # measured −6 jobs on dedup_group_keep at sf0.1.
         smaller = F.when(F.col("v") < F.col("u"), F.col("v"))
         stars = g.groupBy("u").agg(
-            F.min("v").alias("mn"),
             F.max("v").alias("mx"),
             F.min(smaller).alias("mns"),
             F.max(smaller).alias("mxs"),

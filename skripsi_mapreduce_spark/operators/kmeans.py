@@ -17,20 +17,27 @@ Semantics contract (cited to /root/reference/):
   loop runs AT MOST m-1 times (App.java:122-145, §8 Q4), reproduced here.
 - Empty clusters silently vanish (k shrinks), as in the reference (§2.3).
 
-Scale design: one Spark job per iteration (vs the reference's five
-materialization boundaries per iteration, §3.4). Centroids are k x |active
-vocab| — small — so they move driver->executors as a BROADCAST table
+Scale design: while the centroids are small (``CENTROID_LITERAL_CAP``)
+they enter each iteration's plan as ONE constant value — a JSON string
+parsed by ``from_json``, which Catalyst folds into a single array literal
 (replacing the per-task distributed-cache load, MapperKMean.java:55-80
-O30); documents never leave their partitions except for the one
-groupBy(cluster, word) shuffle of the update step, which Catalyst
-partial-aggregates map-side. Distance uses the sparse-safe expansion
-||x||^2 + ||c||^2 - 2x.c (the reference's dense nested loop,
-MapperKMean.java:88-92, NPEs on missing keys — §8 Q10). Per-iteration
-lineage is cut with localCheckpoint so plan depth stays O(1), not O(m).
+O30). Distances are computed map-side over each document's pre-grouped
+sparse vector, and one aggregation returns the new centroid sums together
+with every cluster's size and SSE: two Spark jobs per iteration (the
+shuffle map stage and the bounded collect) vs the reference's five
+materialization boundaries per iteration (§3.4). Documents never leave
+their partitions except for that one groupBy(cluster, word) shuffle,
+which Catalyst partial-aggregates map-side. Each iteration's plan reads
+the checkpointed vectors plus one constant, so plan depth stays O(1), not
+O(m). Past the cap, centroids move driver->executors as a BROADCAST table
+and each iteration's assignments are checkpointed. Distance uses the
+sparse-safe expansion ||x||^2 + ||c||^2 - 2x.c (the reference's dense
+nested loop, MapperKMean.java:88-92, NPEs on missing keys — §8 Q10).
 """
 
 from __future__ import annotations
 
+import json
 import random
 from dataclasses import dataclass, field
 
@@ -41,11 +48,18 @@ from pyspark.sql import types as T
 from ..io import local_df
 
 
-# The literal-centroid assign path embeds every centroid weight in the
-# plan as a map literal; past this many total (cluster, word) entries the
-# plan itself becomes the bottleneck and assignment falls back to the
-# broadcast-join path (the 100 TB shape, where centroids are a table).
+# Past this many total (cluster, word) centroid entries, assignment falls
+# back from the constant-centroid path to the broadcast-join path (the
+# 100 TB shape, where centroids are a table). The constant is one folded
+# value, so plan size no longer grows with the entry count; what still
+# grows is the per-entry map lookup (element_at scans a map linearly, once
+# per document word and cluster). That rationale for keeping the 20,000
+# switch point is unmeasured — the cap has not been retuned.
 CENTROID_LITERAL_CAP = 20_000
+
+# The centroids as the constant-centroid path ships them: ascending
+# cluster order, ||c||^2 precomputed, word -> weight maps.
+_CENTROIDS_TYPE = "array<struct<cluster:int,c2:double,cmap:map<string,double>>>"
 
 
 @dataclass
@@ -104,7 +118,12 @@ def kmeans(
     open vocabulary, so the update refuses to collect more than
     ``max_centroid_entries`` rows (~50 MB at the default) and points at
     ``kmeans_ml``/``kmeans_fixedpoint``, whose centroids never leave the
-    executors."""
+    executors.
+
+    ``assignments`` is LAZY when the last iteration took the constant-centroid
+    path (the usual case): a map-only projection over the checkpointed
+    document vectors that recomputes the distances on each action.
+    Callers that read it more than once may checkpoint it themselves."""
     feats = features.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(word_col).alias("word"),
@@ -113,10 +132,10 @@ def kmeans(
     feats = feats.localCheckpoint(eager=True)  # reused every iteration
 
     # Per-document sparse vector + ||x||^2, computed once. The entries
-    # array feeds the literal-centroid assign (distances map-side, no
-    # shuffle) and the centroid update; doc_norms feeds the join-based
+    # array feeds the constant-centroid assign (distances map-side, no
+    # shuffle) and its centroid update; doc_norms feeds the join-based
     # assign fallback.
-    # entries sorted by word: the literal-assign dot product folds over
+    # entries sorted by word: the constant-centroid dot product folds over
     # this array, and a canonical fold order keeps dist2 ULP-identical
     # across runs/partitionings (collect_list order is shuffle luck)
     docs_vec = (
@@ -169,23 +188,25 @@ def kmeans(
     iterations = 0
     assignments = None
 
+    # the constant-centroid path parses centroid maps from JSON, whose keys
+    # are strings; other word types take the join path
+    literal_words = isinstance(feats.schema["word"].dataType, T.StringType)
     for _ in range(max(limit, 0)):
         iterations += 1
-        # localCheckpoint: assignments feed three aggregations + the next
-        # iteration; pin them once instead of recomputing the join, and cut
-        # lineage so plan depth stays O(1) across iterations.
-        if sum(len(v) for v in centroids.values()) <= CENTROID_LITERAL_CAP:
-            # small centroids: distances computed map-side against literal
-            # maps — the whole assign pass is shuffle-free, and the update
-            # explodes the already-assigned vectors (one shuffle total)
-            assigned = _assign_literal(docs_vec, centroids).localCheckpoint(eager=True)
+        if literal_words and sum(len(v) for v in centroids.values()) <= CENTROID_LITERAL_CAP:
+            # distances are computed map-side against the constant
+            # centroids and the update is ONE aggregation over the assigned
+            # vectors, so the iteration runs two jobs and checkpoints
+            # nothing; the assignments stay a lazy map-only projection
+            assigned = _assign_literal(docs_vec, centroids)
             assignments = assigned.select("doc_id", "cluster", "dist2")
-            new_rows = (
-                assigned.select("cluster", F.explode("entries").alias("e"))
-                .groupBy("cluster", F.col("e.word").alias("word"))
-                .agg(F.sum("e.weight").alias("wsum"))
+            sizes, sse, new_centroid_rows = _update_literal(
+                assigned, len(centroids), max_centroid_entries
             )
         else:
+            # localCheckpoint: assignments feed two aggregations + the next
+            # iteration; pin them once instead of recomputing the join, and
+            # cut lineage so plan depth stays O(1) across iterations.
             assignments = _assign(spark, feats, doc_norms, centroids).localCheckpoint(
                 eager=True
             )
@@ -194,14 +215,14 @@ def kmeans(
                 .groupBy("cluster", "word")
                 .agg(F.sum("weight").alias("wsum"))
             )
-        # one aggregation job for sizes + SSE (k rows collected)
-        stats = assignments.groupBy("cluster").agg(
-            F.count("*").alias("n"), F.sum("dist2").alias("sse")
-        ).collect()
-        sizes = {r["cluster"]: r["n"] for r in stats}
-        sse = {r["cluster"]: r["sse"] for r in stats}
+            # one aggregation job for sizes + SSE (k rows collected)
+            stats = assignments.groupBy("cluster").agg(
+                F.count("*").alias("n"), F.sum("dist2").alias("sse")
+            ).collect()
+            sizes = {r["cluster"]: r["n"] for r in stats}
+            sse = {r["cluster"]: r["sse"] for r in stats}
+            new_centroid_rows = new_rows.limit(max_centroid_entries + 1).collect()
         history.append(sse)
-        new_centroid_rows = new_rows.limit(max_centroid_entries + 1).collect()
         if len(new_centroid_rows) > max_centroid_entries:
             raise RuntimeError(
                 f"k-means centroid update exceeds max_centroid_entries="
@@ -1327,37 +1348,97 @@ def kmeans_ml(
 def _assign_literal(
     docs_vec: DataFrame, centroids: dict[int, dict[str, float]]
 ) -> DataFrame:
-    """Shuffle-free assignment pass over pre-collected sparse vectors.
+    """Shuffle-free assignment pass over pre-collected sparse vectors:
+    ``docs_vec`` plus the nearest ``cluster`` and its ``dist2``.
 
-    Each centroid becomes a word->weight MAP LITERAL in the plan; the dot
-    product folds over the document's own entries (sparse, exactly the
-    terms the join path sums), dist2 = max(||x||^2 + ||c||^2 - 2x.c, 0)
-    as in ``_assign``, and the argmin is ``array_min`` over
-    (dist2, cluster) structs — lexicographic struct ordering reproduces
-    the min_by tie-break (lowest cluster on equal distance) exactly."""
-    cand = []
-    for c in sorted(centroids):
-        vec = centroids[c]
-        c2 = sum(v * v for v in vec.values())
-        cmap = F.create_map(
-            *[lit for w in sorted(vec) for lit in (F.lit(w), F.lit(float(vec[w])))]
-        )
+    The centroids enter the plan as ONE constant — a JSON array of
+    (cluster, ||c||^2, word->weight map) parsed by ``from_json``, which
+    Catalyst folds into a single literal — so the expression tree is the
+    same size for any k and vocabulary. Per document, ``transform`` over
+    the clusters folds the dot product over the document's own entries
+    (sparse, exactly the terms the join path sums), dist2 = max(||x||^2 +
+    ||c||^2 - 2x.c, 0) as in ``_assign``, and the argmin is ``array_min``
+    over (dist2, cluster) structs — lexicographic struct ordering
+    reproduces the min_by tie-break (lowest cluster on equal distance)
+    exactly. JSON round-trips every double exactly (shortest-repr out,
+    correctly rounded parse in), so the weights match the driver's."""
+    consts = json.dumps(
+        [
+            {
+                "cluster": c,
+                # ||c||^2 in the dict's own order, as the centroid maps
+                # were collected
+                "c2": float(sum(v * v for v in centroids[c].values())),
+                # a null word never matches (element_at on a null key is
+                # null), as in the join path
+                "cmap": {w: float(v) for w, v in centroids[c].items() if w is not None},
+            }
+            for c in sorted(centroids)
+        ]
+    )
+
+    def candidate(cent):
         dot = F.aggregate(
             F.col("entries"),
             F.lit(0.0),
             lambda acc, e: acc
-            + e["weight"] * F.coalesce(F.element_at(cmap, e["word"]), F.lit(0.0)),
+            + e["weight"] * F.coalesce(F.element_at(cent["cmap"], e["word"]), F.lit(0.0)),
         )
-        dist2 = F.greatest(F.col("x2") + F.lit(float(c2)) - 2 * dot, F.lit(0.0))
-        cand.append(F.struct(dist2.alias("dist2"), F.lit(c).cast("int").alias("cluster")))
-    best = F.array_min(F.array(*cand))
-    return docs_vec.select(
-        "doc_id",
-        "entries",
-        F.col("x2"),
-        best["cluster"].alias("cluster"),
-        best["dist2"].alias("dist2"),
+        dist2 = F.greatest(F.col("x2") + cent["c2"] - 2 * dot, F.lit(0.0))
+        return F.struct(dist2.alias("dist2"), cent["cluster"].alias("cluster"))
+
+    best = F.array_min(F.transform(F.from_json(F.lit(consts), _CENTROIDS_TYPE), candidate))
+    # `best` is its own column so the distances are computed once per row,
+    # not once per field read from it
+    return docs_vec.select("doc_id", "entries", best.alias("best")).select(
+        "doc_id", "entries", "best.cluster", "best.dist2"
     )
+
+
+def _update_literal(
+    assigned: DataFrame, n_clusters: int, max_entries: int
+) -> tuple[dict[int, int], dict[int, float], list]:
+    """The constant-centroid path's update step: ONE aggregation over the
+    assigned vectors, collected in one bounded job. Returns (sizes, SSE,
+    centroid-sum rows (cluster, word, wsum)).
+
+    Each document contributes its entries under (cluster, word) plus two
+    sentinel entries with a NULL word: 1.0 under the key -1-2*cluster
+    (summing to the cluster's size) and dist2 under -2-2*cluster (its
+    SSE). Real keys keep cluster >= 0, so no word — not even a null one —
+    collides with a sentinel, and the shuffle rows keep the width of the
+    centroid sums (a count column would widen every row). Every sum runs
+    over the same rows in the same order as separate aggregations would,
+    so the values are bit-identical to them."""
+    no_word = F.lit(None).cast("string")
+    sentinels = F.array(
+        F.struct(no_word.alias("word"), F.lit(1.0).alias("weight")),
+        F.struct(no_word.alias("word"), F.col("dist2").alias("weight")),
+    )
+    c, pos = F.col("cluster"), F.col("pos")
+    rows = (
+        assigned.select("cluster", F.posexplode(F.concat(sentinels, "entries")).alias("pos", "e"))
+        .groupBy(
+            F.when(pos > 1, c).otherwise(-1 - 2 * c - pos).alias("cluster"),
+            F.col("e.word").alias("word"),
+        )
+        .agg(F.sum("e.weight").alias("wsum"))
+        # the guard counts centroid rows only: at most 2 sentinels a cluster
+        .limit(max_entries + 1 + 2 * n_clusters)
+        .collect()
+    )
+    sizes: dict[int, int] = {}
+    sse: dict[int, float] = {}
+    centroid_rows = []
+    for r in rows:
+        key = r["cluster"]
+        if key >= 0:
+            centroid_rows.append(r)
+        elif key % 2:
+            sizes[(-1 - key) // 2] = int(r["wsum"])
+        else:
+            sse[(-2 - key) // 2] = r["wsum"]
+    return sizes, sse, centroid_rows
 
 
 def _collect_centroids(centroids_df: DataFrame) -> dict[int, dict[str, float]]:

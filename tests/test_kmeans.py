@@ -95,9 +95,120 @@ def test_kmeans_empty_cluster_shrinks(spark):
 def test_kmeans_centroid_bound_enforced(spark, corpus, features):
     """The driver-side centroid materialization refuses to collect more
     than max_centroid_entries rows and names the distributed escape
-    hatches in the error."""
+    hatches in the error. The bound counts centroid rows only, not the
+    size/SSE rows the constant-centroid update collects alongside them:
+    exactly max_centroid_entries rows pass, one more raises."""
     with pytest.raises(RuntimeError, match="kmeans_ml|kmeans_fixedpoint"):
         kmeans(spark, features, k=3, max_iter=3, seed=42, max_centroid_entries=2)
+    n = sum(len(v) for v in kmeans(spark, features, k=3, max_iter=2, seed=42).centroids.values())
+    kmeans(spark, features, k=3, max_iter=2, seed=42, max_centroid_entries=n)
+    with pytest.raises(RuntimeError, match="max_centroid_entries"):
+        kmeans(spark, features, k=3, max_iter=2, seed=42, max_centroid_entries=n - 1)
+
+
+AWKWARD_WORDS = [
+    'say "hi"', "back\\slash", "café", "naïve", "日本語", "😀", "bell\x07", "tab\there",
+    '{"cluster": 1}', "[0, 1.5]", "null", "",
+]
+
+
+def _awkward_features(spark):
+    """Three well-separated groups whose words need JSON escaping; weights
+    include a subnormal-adjacent 1e-300 and the inexact 0.1+0.2."""
+    groups = [AWKWARD_WORDS[0:6] + ["a1", "a2"], AWKWARD_WORDS[6:12] + ["b1", "b2"],
+              ["c1", "c2", "c3", "c4", "c5", "c6"]]
+    weights = [1e-300, 0.1 + 0.2, 1.0, 2.5, 1 / 3, 0.7]
+    rows = []
+    for d in range(1, 31):
+        g = groups[d % 3]
+        for j in range(4):
+            w = g[(d + j) % len(g)]
+            rows.append((d, w, weights[(d * 7 + j) % len(weights)] * (1 + 3 * (d % 3))))
+    return spark.createDataFrame(rows, "doc_id long, word string, weight double")
+
+
+def test_kmeans_literal_path_matches_join_path(spark, monkeypatch):
+    """The constant-centroid assignment ships words and weights through a
+    JSON constant; the broadcast-join path ships them as a table. Both must
+    agree on assignments, centroids and iteration count exactly. dist2 and
+    SSE may differ in the last bits (the join path sums the dot product in
+    shuffle order), hence rel=1e-9 for those."""
+    from skripsi_mapreduce_spark.operators import kmeans as km
+
+    feats = _awkward_features(spark)
+    lit = kmeans(spark, feats, k=3, max_iter=6, seed=7)
+    monkeypatch.setattr(km, "CENTROID_LITERAL_CAP", 0)  # every iteration joins
+    join = kmeans(spark, feats, k=3, max_iter=6, seed=7)
+
+    got_l = {r["doc_id"]: (r["cluster"], r["dist2"]) for r in lit.assignments.collect()}
+    got_j = {r["doc_id"]: (r["cluster"], r["dist2"]) for r in join.assignments.collect()}
+    assert {d: c for d, (c, _) in got_l.items()} == {d: c for d, (c, _) in got_j.items()}
+    assert len(got_l) == 30
+    for d, (_, dist2) in got_l.items():
+        assert dist2 == pytest.approx(got_j[d][1], rel=1e-9, abs=1e-300)
+    assert lit.centroids == join.centroids
+    assert set().union(*lit.centroids.values()) >= set(AWKWARD_WORDS)
+    assert lit.iterations == join.iterations >= 2
+    assert len(lit.history) == len(join.history)
+    for hl, hj in zip(lit.history, join.history):
+        assert hl.keys() == hj.keys()
+        for c in hl:
+            assert hl[c] == pytest.approx(hj[c], rel=1e-9)
+
+
+def test_kmeans_non_string_words_match_string_words(spark, features):
+    """Centroid maps travel as JSON, whose keys are strings, so integer
+    words take the join path; they must cluster exactly like the same
+    corpus with string words."""
+    words = sorted(r["word"] for r in features.select("word").distinct().collect())
+    ids = spark.createDataFrame(list(enumerate(words)), "word_id int, word string")
+    int_feats = features.join(ids, "word").select("doc_id", F.col("word_id").alias("word"), "weight")
+    a = kmeans(spark, features, k=3, max_iter=10, seed=42)
+    b = kmeans(spark, int_feats, k=3, max_iter=10, seed=42)
+    assert {r["doc_id"]: r["cluster"] for r in a.assignments.collect()} == {
+        r["doc_id"]: r["cluster"] for r in b.assignments.collect()
+    }
+    assert a.centroids == {c: {words[w]: v for w, v in vec.items()} for c, vec in b.centroids.items()}
+    assert a.iterations == b.iterations
+
+
+def test_kmeans_literal_iteration_runs_two_jobs(spark, features):
+    """Each constant-centroid iteration runs exactly two Spark jobs (the
+    update's shuffle map stage and its bounded collect): the job-count
+    difference between runs of different length is 2 per iteration."""
+    sc = spark.sparkContext
+
+    def jobs_and_iterations(max_iter, group):
+        sc.setJobGroup(group, "kmeans job-count gate")
+        try:
+            res = kmeans(spark, features, k=3, max_iter=max_iter, seed=42)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), res.iterations
+
+    jobs_1, it_1 = jobs_and_iterations(2, "kmeans-gate-short")
+    jobs_n, it_n = jobs_and_iterations(10, "kmeans-gate-long")
+    assert it_1 == 1 and it_n > it_1
+    assert jobs_n - jobs_1 == 2 * (it_n - it_1)
+
+
+def test_kmeans_literal_assign_plan_size_independent_of_k(spark):
+    """The centroids are one folded constant: the assign expression holds
+    one element_at whatever k is, and no from_json survives optimization
+    (a per-row parse would re-read the JSON for every document)."""
+    from skripsi_mapreduce_spark.operators.kmeans import _assign_literal
+
+    docs_vec = spark.createDataFrame(
+        [(1, [("w0_1", 1.0), ("x", 2.0)], 5.0)],
+        "doc_id long, entries array<struct<word:string,weight:double>>, x2 double",
+    )
+    counts = []
+    for k in (3, 8):
+        cents = {c: {f"w{c}_{i}": 0.5 + i for i in range(20)} for c in range(k)}
+        qe = _assign_literal(docs_vec, cents)._jdf.queryExecution()
+        counts.append(qe.analyzed().toString().count("element_at"))
+        assert "from_json" not in qe.optimizedPlan().toString()
+    assert counts == [1, 1]
 
 
 def test_kmeans_fixedpoint_signed_features(spark):
