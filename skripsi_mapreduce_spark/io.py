@@ -198,12 +198,6 @@ def table_column_max(sf_dir: str, name: str, column: str) -> int | None:
         return None
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load the whole catalog; plans select from these lazily, so Catalyst
-    prunes columns and pushes predicates into the parquet scans."""
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every catalog table as a temp view for the SQL surface."""
     for t in TABLES:

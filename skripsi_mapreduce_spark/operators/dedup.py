@@ -19,6 +19,24 @@ hash functions):
 Everything is built-in DataFrame ops (md5, explode, groupBy, joins) —
 no Python UDFs — so the whole family stays inside whole-stage codegen.
 
+The MinHash and n-gram kernels (minhash_near_dups, minhash_dup_edges,
+minhash_near_dups_against, ngram_near_dups) are built from one copy of
+each step:
+
+- fingerprint cascade (:func:`_fingerprint_cascade`): identical shingle
+  sets collapse to one representative; LSH and verify run on those;
+- signatures (:func:`_minhash_bands`): the per-hash MIN aggregates and
+  the band-hash array, in :func:`_band_hash_wide` alone or fused with the
+  bitmaps in :func:`_fused_sig_table` when the dense dictionary fits;
+- band join (:func:`_band_side` + :func:`_first_agreeing_band`): an
+  equi-join on (band, band_hash) that keeps each pair at its first
+  agreeing band instead of running a distinct;
+- exact verify, two kernels: bitmaps under the dictionary cap
+  (:func:`_size_bound`, then :func:`_bitmap_jaccard`: popcount overlap
+  behind a pushdown fence, o > 0, jaccard) and the candidate-restricted
+  shared-shingle join past it (:func:`_shared_shingle_jaccard`, self or
+  batch x corpus).
+
 Scale notes: shuffle keys are digests or (band, bucket-hash) — fixed-width,
 never the document text. Shingle explosion multiplies rows by ~|doc|; at
 100 TB the band-bucket groupBy is the big shuffle and it is uniformly
@@ -136,19 +154,17 @@ def lsh_bands(sigs: DataFrame, rows_per_band: int = 4) -> DataFrame:
     )
 
 
-def _band_hash_wide(sh: DataFrame, num_hashes: int = 16, rows_per_band: int = 4) -> DataFrame:
-    """(doc_id, bands: array<string>) — per-document ordered band hashes in
-    ONE wide aggregation: each shingle row evaluates all ``num_hashes``
-    seeded hashes as COLUMNS, one groupBy(doc_id) takes the MINs map-side
-    (partial agg), and band hashes are md5 over the concatenated slice —
-    so the shuffle carries |docs| rows of 16 strings instead of
-    16×|shingles| exploded rows (the same one-wide-agg trick that made
-    SimHash signatures cheap)."""
+def _minhash_bands(num_hashes: int, rows_per_band: int) -> tuple[list, F.Column]:
+    """(per-hash MIN aggregates ``_s0..``, the ordered band-hash array over
+    them): each shingle row evaluates all ``num_hashes`` seeded hashes as
+    COLUMNS, one groupBy(doc_id) takes the MINs map-side (partial agg), and
+    band hashes are md5 over the concatenated slice — so the shuffle
+    carries |docs| rows of 16 strings instead of 16×|shingles| exploded
+    rows (the same one-wide-agg trick that made SimHash signatures cheap)."""
     mins = [
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"_s{i}")
         for i in range(num_hashes)
     ]
-    wide = sh.groupBy("doc_id").agg(*mins)
     # ceil: a trailing partial band hashes just its remainder signatures,
     # matching lsh_bands' `i div rows_per_band` grouping exactly
     n_bands = -(-num_hashes // rows_per_band)
@@ -168,7 +184,14 @@ def _band_hash_wide(sh: DataFrame, num_hashes: int = 16, rows_per_band: int = 4)
             for b in range(n_bands)
         ]
     )
-    return wide.select("doc_id", bands.alias("bands"))
+    return mins, bands
+
+
+def _band_hash_wide(sh: DataFrame, num_hashes: int = 16, rows_per_band: int = 4) -> DataFrame:
+    """(doc_id, bands: array<string>) — per-document ordered band hashes in
+    ONE wide aggregation (:func:`_minhash_bands`)."""
+    mins, bands = _minhash_bands(num_hashes, rows_per_band)
+    return sh.groupBy("doc_id").agg(*mins).select("doc_id", bands.alias("bands"))
 
 
 def lsh_band_hashes(sh: DataFrame, num_hashes: int = 16, rows_per_band: int = 4) -> DataFrame:
@@ -254,79 +277,47 @@ def _lsh_verified_pairs(
         bucket_pairs = stats["p"] or 0
         n_docs = (stats["rows"] or 0) / n_bands
         if n_docs * (n_docs - 1) / 2 <= 4 * bucket_pairs:
-            # same lossless size bound as _jaccard_pairs_bitmap, applied
-            # as a join-condition prune before the per-pair work
-            both = fused
-            a = both.select(
+            a = fused.select(
                 F.col("doc_id").alias("id_a"),
                 F.col("bm").alias("ba"),
                 F.col("n").alias("na"),
                 F.col("bands").alias("bba"),
             )
-            b = both.select(
+            b = fused.select(
                 F.col("doc_id").alias("id_b"),
                 F.col("bm").alias("bb"),
                 F.col("n").alias("nb"),
                 F.col("bands").alias("bbb"),
             )
-            size_ok = F.least(F.col("na"), F.col("nb")) >= F.lit(threshold) * F.greatest(
-                F.col("na"), F.col("nb")
-            )
+            # the size bound prunes in the join condition, before any
+            # per-pair work
             npart = sh.sparkSession.sparkContext.defaultParallelism
             pairs = a.repartition(npart).join(
-                b, (F.col("id_a") < F.col("id_b")) & size_ok
+                b, (F.col("id_a") < F.col("id_b")) & _size_bound(threshold)
             )
-            # flat unrolled forms (no per-pair array allocation — see
-            # _bitmap_overlap_flat): band agreement is an n_bands-term OR,
-            # overlap an n_words-term popcount sum
+            # flat unrolled band agreement (no per-pair array allocation —
+            # see _bitmap_overlap_flat): an n_bands-term OR, cheap enough
+            # to stay BELOW the fence, welcome in the join condition as an
+            # early prune
             shares_band = F.lit(False)
             for bd in range(n_bands):
                 shares_band = shares_band | F.expr(f"bba[{bd}] = bbb[{bd}]")
-            overlap = _bitmap_overlap_flat(n_words)
-            # shares_band stays BELOW the fence: it's a cheap n_bands-term
-            # OR, welcome in the join condition as an early prune
-            return (
-                _overlap_fence(
-                    pairs.filter(shares_band).select(
-                        "id_a", "id_b", "na", "nb", overlap.alias("o")
-                    ),
-                    n_words,
-                )
-                .filter(F.col("o") > 0)
-                .select(
-                    "id_a",
-                    "id_b",
-                    (F.col("o") / (F.col("na") + F.col("nb") - F.col("o"))).alias("jaccard"),
-                )
-                .filter(F.col("jaccard") >= threshold)
+            return _bitmap_jaccard(pairs.filter(shares_band), n_words).filter(
+                F.col("jaccard") >= threshold
             )
-    # scale path: equi-join on the exploded (band, band_hash) — with the
-    # full band array carried on both sides, a canonical-witness filter
-    # (emit a pair only from its FIRST agreeing band) replaces the
-    # distinct shuffle over the candidate set
-    if d_v is not None:
         wide = fused  # (doc_id, bands, ...) — extra cols pruned below
     else:
         wide = _band_hash_wide(sh, num_hashes, rows_per_band).localCheckpoint(
             eager=False
         )
-    a = wide.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("bands").alias("bands_a"),
-        F.posexplode("bands").alias("band", "band_hash"),
-    )
-    b = wide.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("bands").alias("bands_b"),
-        F.posexplode("bands").alias("band", "band_hash"),
-    )
-    first_agree = F.array_position(
-        F.zip_with("bands_a", "bands_b", lambda x, y: x == y), True
-    )
+    # scale path: equi-join on the exploded (band, band_hash) — with the
+    # full band array carried on both sides, the first-agreeing-band
+    # witness replaces the distinct shuffle over the candidate set
     cands = (
-        a.join(b, ["band", "band_hash"])
+        _band_side(wide, "a")
+        .join(_band_side(wide, "b"), ["band", "band_hash"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(first_agree == F.col("band") + 1)  # array_position is 1-indexed
+        .filter(_first_agreeing_band())
         .select("id_a", "id_b")
     )
     if d_v is not None:
@@ -517,34 +508,39 @@ def _fused_sig_table(
     aggregation exchange and the doc_id join the two separate tables
     cost. ``n`` = count(*) equals the popcount total because the
     shingle rows are distinct per doc and the dictionary join is 1:1."""
-    mins = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"_s{i}")
-        for i in range(num_hashes)
-    ]
+    mins, bands = _minhash_bands(num_hashes, rows_per_band)
     ent = sh.join(F.broadcast(d), "shingle")
     wide = ent.groupBy("doc_id").agg(
         *mins, *_word_or_aggs(n_words), F.count("*").alias("n")
     )
-    n_bands = -(-num_hashes // rows_per_band)
-    bands = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"_s{i}")
-                        for i in range(
-                            b * rows_per_band, min((b + 1) * rows_per_band, num_hashes)
-                        )
-                    ],
-                )
-            )
-            for b in range(n_bands)
-        ]
-    )
     return wide.select(
         "doc_id", bands.alias("bands"), _word_array(n_words).alias("bm"), "n"
     )
+
+
+def _band_side(wide: DataFrame, side: str, with_bitmap: bool = False) -> DataFrame:
+    """One side (``side`` = "a" or "b") of the (band, band_hash) equi-join
+    over a band table: one row per band with ``id_<side>`` and the full
+    ``bands_<side>`` array (for :func:`_first_agreeing_band`), plus the
+    bitmap ``b<side>`` and set size ``n<side>`` when ``with_bitmap``, for
+    a verify inline with the join."""
+    carry = [F.col("bm").alias(f"b{side}"), F.col("n").alias(f"n{side}")] if with_bitmap else []
+    return wide.select(
+        F.col("doc_id").alias(f"id_{side}"),
+        F.col("bands").alias(f"bands_{side}"),
+        *carry,
+        F.posexplode("bands").alias("band", "band_hash"),
+    )
+
+
+def _first_agreeing_band() -> F.Column:
+    """Canonical-witness filter for a band join: a pair agreeing on several
+    bands is kept only at its FIRST agreeing band, so no distinct shuffle
+    ever runs over the candidate multiset — at sf1.0 the distinct over 73M
+    banded candidates measured 126s of the entry's 114s total while the
+    bitmap verification itself took 3.3s."""
+    first = F.array_position(F.zip_with("bands_a", "bands_b", lambda x, y: x == y), True)
+    return first == F.col("band") + 1  # array_position is 1-indexed
 
 
 def _bitmap_overlap_flat(n_words: int) -> F.Column:
@@ -583,6 +579,35 @@ def _overlap_fence(df: DataFrame, n_words: int) -> DataFrame:
     return df.observe(f"_pair_fence_{next(_FENCE_SEQ)}", F.count(F.lit(1)).alias("pairs"))
 
 
+def _size_bound(threshold: float) -> F.Column:
+    """LOSSLESS Jaccard size bound over the pair's set sizes ``na``/``nb``:
+    J(A,B) = o/(na+nb-o) <= min(na,nb)/max(na,nb), so a pair whose sizes
+    differ by more than 1/t is rejected with two long comparisons before
+    any per-pair bitmap work runs."""
+    return F.least(F.col("na"), F.col("nb")) >= F.lit(threshold) * F.greatest(
+        F.col("na"), F.col("nb")
+    )
+
+
+def _bitmap_jaccard(pairs: DataFrame, n_words: int) -> DataFrame:
+    """(id_a, id_b, jaccard) from pairs carrying both bitmaps (``ba``,
+    ``bb``) and set sizes (``na``, ``nb``): the flat popcount overlap
+    behind :func:`_overlap_fence`, zero-overlap pairs dropped (every
+    verify backend drops them), then o / (na + nb - o)."""
+    scored = pairs.select(
+        "id_a", "id_b", "na", "nb", _bitmap_overlap_flat(n_words).alias("o")
+    )
+    return (
+        _overlap_fence(scored, n_words)
+        .filter(F.col("o") > 0)
+        .select(
+            "id_a",
+            "id_b",
+            (F.col("o") / (F.col("na") + F.col("nb") - F.col("o"))).alias("jaccard"),
+        )
+    )
+
+
 def _jaccard_pairs_bitmap(
     bm: DataFrame,
     n_words: int,
@@ -597,18 +622,13 @@ def _jaccard_pairs_bitmap(
     joins against the small bitmap table + a per-pair popcount — no
     shuffle wider than the candidate list itself.
 
-    ``min_jaccard`` pushes a LOSSLESS size bound below the popcount:
-    J(A,B) = o/(na+nb-o) <= min(na,nb)/max(na,nb), so any pair whose
-    set sizes differ by more than 1/t can be rejected with two long
-    comparisons before the per-pair bitmap fold runs — on the all-pairs
-    form that is a join-condition prune, cutting the quadratic kernel to
-    the size-compatible band."""
-    overlap = _bitmap_overlap_flat(n_words)
+    ``min_jaccard`` pushes the lossless :func:`_size_bound` below the
+    popcount — on the all-pairs form that is a join-condition prune,
+    cutting the quadratic kernel to the size-compatible band."""
     a = bm.select(F.col("doc_id").alias("id_a"), F.col("bm").alias("ba"), F.col("n").alias("na"))
     b = bm.select(F.col("doc_id").alias("id_b"), F.col("bm").alias("bb"), F.col("n").alias("nb"))
     size_ok = (
-        F.least(F.col("na"), F.col("nb"))
-        >= F.lit(min_jaccard) * F.greatest(F.col("na"), F.col("nb"))
+        _size_bound(min_jaccard)
         if min_jaccard is not None and min_jaccard > 0
         else F.lit(True)
     )
@@ -617,17 +637,7 @@ def _jaccard_pairs_bitmap(
         joined = a.repartition(npart).join(b, (F.col("id_a") < F.col("id_b")) & size_ok)
     else:
         joined = pairs.join(a, "id_a").join(b, "id_b").filter(size_ok)
-    return (
-        _overlap_fence(
-            joined.select("id_a", "id_b", "na", "nb", overlap.alias("o")), n_words
-        )
-        .filter(F.col("o") > 0)
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("o") / (F.col("na") + F.col("nb") - F.col("o"))).alias("jaccard"),
-        )
-    )
+    return _bitmap_jaccard(joined, n_words)
 
 
 def _jaccard_pairs_arrays(sh: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -712,25 +722,36 @@ def jaccard_pairs(
             return _jaccard_pairs_bitmap(bm_nw[0], bm_nw[1], pairs, min_jaccard)
     if verify_max_tokens > 0 and pairs is not None:
         return _jaccard_pairs_arrays(sh, pairs)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    return _shared_shingle_jaccard(sh, sh, pairs)
+
+
+def _shared_shingle_jaccard(
+    sh_a: DataFrame, sh_b: DataFrame, pairs: DataFrame | None
+) -> DataFrame:
+    """(id_a, id_b, jaccard) by the shared-shingle equi-join: overlap
+    o = |A ∩ B| from joining shingle rows, set sizes from per-doc counts.
+    ``sh_a`` holds the ``id_a`` documents' shingles, ``sh_b`` the ``id_b``
+    ones' (the same table for a self-join). With candidate ``pairs`` the
+    join is restricted BEFORE it meets the second side: each candidate
+    joins only its own two shingle sets, so the work stays linear in
+    |candidates|, not quadratic in docs-per-hot-shingle (the LSH point at
+    scale). ``pairs=None`` is the self form: every pair of ``sh_a``
+    sharing >= 1 shingle, id_a < id_b."""
     if pairs is not None:
-        # Restrict BEFORE the shingle join: intersecting only candidate
-        # pairs keeps the join linear in |candidates|, not quadratic in
-        # docs-per-hot-shingle (the LSH point at scale).
-        sa = pairs.join(sh.withColumnRenamed("doc_id", "id_a"), "id_a").select(
+        sa = pairs.join(sh_a.withColumnRenamed("doc_id", "id_a"), "id_a").select(
             "id_a", "id_b", "shingle"
         )
         overlap = (
             sa.join(
-                sh.select(F.col("doc_id").alias("id_b"), "shingle"),
+                sh_b.select(F.col("doc_id").alias("id_b"), "shingle"),
                 ["id_b", "shingle"],
             )
             .groupBy("id_a", "id_b")
             .agg(F.count("*").alias("o"))
         )
     else:
-        a = sh.alias("sa")
-        b = sh.alias("sb")
+        a = sh_a.alias("sa")
+        b = sh_b.alias("sb")
         overlap = (
             a.join(
                 b,
@@ -742,11 +763,15 @@ def jaccard_pairs(
             )
             .agg(F.count("*").alias("o"))
         )
-    na = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
+
+    def sizes(sh: DataFrame, side: str) -> DataFrame:
+        return sh.groupBy("doc_id").agg(F.count("*").alias("n")).select(
+            F.col("doc_id").alias(f"id_{side}"), F.col("n").alias(f"n{side}")
+        )
+
     return (
-        overlap.join(na, "id_a")
-        .join(nb, "id_b")
+        overlap.join(sizes(sh_a, "a"), "id_a")
+        .join(sizes(sh_b, "b"), "id_b")
         .select(
             "id_a",
             "id_b",
@@ -767,6 +792,21 @@ def _fingerprint_groups(sh: DataFrame) -> DataFrame:
     )
     reps = fp.groupBy("fp").agg(F.min("doc_id").alias("rep"))
     return fp.join(reps, "fp")
+
+
+def _fingerprint_cascade(sh: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(groups, rep_sh): the fingerprint groups of the shingle table
+    (:func:`_fingerprint_groups`) and the shingle rows of each group's
+    representative only — the input every cascade runs its LSH and
+    verification on. Both lazily pinned: each feeds several consumers."""
+    groups = _fingerprint_groups(sh).localCheckpoint(eager=False)
+    # rep_sh's checkpoint earns its conversion: dropping it (tried in
+    # optimization round 12) re-ran the sh⋈reps join under both the
+    # dictionary probe and the fused aggregation — +1 job and slower.
+    rep_sh = sh.join(
+        groups.filter(F.col("doc_id") == F.col("rep")).select("doc_id"), "doc_id"
+    ).localCheckpoint(eager=False)
+    return groups, rep_sh
 
 
 def _cascade_output(
@@ -812,7 +852,6 @@ def minhash_near_dups(
     shingle_size: int = 1,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cascade: bool = True,
     sh: DataFrame | None = None,
     bitmap_max_vocab: int = BITMAP_MAX_VOCAB,
     verify_max_tokens: int = 0,
@@ -826,9 +865,9 @@ def minhash_near_dups(
     prefix arm, re-enabling the probe on precisely the saturated
     corpora that route here).
 
-    ``cascade=True`` (the 100 TB path) first collapses identical shingle
-    SETS into fingerprint groups and runs LSH + verification on one
-    REPRESENTATIVE per group only, then expands: within-group pairs are
+    The fingerprint cascade (the 100 TB path) first collapses identical
+    shingle SETS into fingerprint groups and runs LSH + verification on
+    one REPRESENTATIVE per group only, then expands: within-group pairs are
     jaccard 1.0 by definition; cross-group pairs inherit their
     representatives' jaccard (the set determines it). Result is
     row-identical to the brute pipeline, but the quadratic verify work
@@ -844,17 +883,7 @@ def minhash_near_dups(
     # — pin it once instead of re-tokenizing the corpus per consumer
     if sh is None:
         sh = shingles(df, id_col, text_col, shingle_size).localCheckpoint(eager=False)
-    if not cascade:
-        return _lsh_verified_pairs(
-            sh, num_hashes, rows_per_band, threshold,
-            bitmap_max_vocab=bitmap_max_vocab,
-            verify_max_tokens=verify_max_tokens,
-        )
-
-    groups = _fingerprint_groups(sh).localCheckpoint(eager=False)
-    rep_sh = sh.join(
-        groups.filter(F.col("doc_id") == F.col("rep")).select("doc_id"), "doc_id"
-    ).localCheckpoint(eager=False)
+    groups, rep_sh = _fingerprint_cascade(sh)
     rep_pairs = _lsh_verified_pairs(
         rep_sh, num_hashes, rows_per_band, threshold,
         bitmap_max_vocab=bitmap_max_vocab,
@@ -892,13 +921,7 @@ def minhash_dup_edges(
     use minhash_near_dups when the pair list itself (with jaccard) is the
     product."""
     sh = shingles(df, id_col, text_col, shingle_size).localCheckpoint(eager=False)
-    groups = _fingerprint_groups(sh).localCheckpoint(eager=False)
-    # rep_sh's checkpoint earns its conversion: dropping it (tried in
-    # optimization round 12) re-ran the sh⋈reps join under both the
-    # dictionary probe and the fused aggregation — +1 job and slower.
-    rep_sh = sh.join(
-        groups.filter(F.col("doc_id") == F.col("rep")).select("doc_id"), "doc_id"
-    ).localCheckpoint(eager=False)
+    groups, rep_sh = _fingerprint_cascade(sh)
     rep_pairs = _lsh_verified_pairs(sh=rep_sh, num_hashes=num_hashes,
                                     rows_per_band=rows_per_band, threshold=threshold)
     stars = groups.filter(F.col("doc_id") != F.col("rep")).select(
@@ -933,70 +956,51 @@ def minhash_near_dups_against(
     their rep's verdict through a narrow join. (3) The corpus never
     self-joins, and at 100 TB the corpus rep-band table is written once,
     bucketed by (band, band_hash) (io.write_bucketed), so each daily
-    batch probes only its matching buckets. Verification is candidate-
-    restricted: each candidate rep pair joins only its own two shingle
-    sets."""
+    batch probes only its matching buckets.
+
+    Verification is candidate-restricted on both arms. Under the dense
+    dictionary cap (``BITMAP_MAX_VOCAB``, probed on the union of both
+    sides' rep shingles) each side's bitmap and set size ride the band
+    explode and the popcount verify runs inline with the band join. Past
+    the cap, the witness-filtered candidates go through the shared-shingle
+    verify (:func:`_shared_shingle_jaccard`), where each candidate rep
+    pair joins only its own two shingle sets."""
     sh_c = shingles(corpus, id_col, text_col, shingle_size).localCheckpoint(eager=False)
     sh_b = shingles(batch, id_col, text_col, shingle_size).localCheckpoint(eager=False)
-    g_c = _fingerprint_groups(sh_c).localCheckpoint(eager=False)
-    g_b = _fingerprint_groups(sh_b).localCheckpoint(eager=False)
-    rep_sh_c = sh_c.join(
-        g_c.filter(F.col("doc_id") == F.col("rep")).select("doc_id"), "doc_id"
-    ).localCheckpoint(eager=False)
-    rep_sh_b = sh_b.join(
-        g_b.filter(F.col("doc_id") == F.col("rep")).select("doc_id"), "doc_id"
-    ).localCheckpoint(eager=False)
-    # cross-side band join with the canonical-witness filter: a pair is
-    # emitted only from its FIRST agreeing band, so no distinct shuffle
-    # ever runs over the candidate multiset — at sf1.0 the distinct over
-    # 73M banded candidates measured 126s of the entry's 114s total
-    # while the bitmap verification itself took 3.3s.
+    g_c, rep_sh_c = _fingerprint_cascade(sh_c)
+    g_b, rep_sh_b = _fingerprint_cascade(sh_b)
     # When the shared dictionary fits, each side's band hashes, bitmap
     # and set size come out of ONE fused aggregation (_fused_sig_table)
     # instead of a band aggregation per side plus a separate bitmap
     # build over the union — same rows, three fewer exchanges and one
     # fewer dictionary job (optimization round 11).
     d_v = _bitmap_dictionary(rep_sh_b.unionByName(rep_sh_c), BITMAP_MAX_VOCAB)
-    first_agree = F.array_position(
-        F.zip_with("bands_a", "bands_b", lambda x, y: x == y), True
-    )
     if d_v is not None:
         d, vocab = d_v
         n_words = (vocab + 63) // 64
         wide_b = _fused_sig_table(rep_sh_b, d, n_words, num_hashes, rows_per_band)
         wide_c = _fused_sig_table(rep_sh_c, d, n_words, num_hashes, rows_per_band)
-        # The bitmap and set size ride the band explode (optimization
-        # round 12): previously the witness-filtered candidates joined
-        # back to a union of the two fused tables, giving each side's
-        # aggregation TWO differently-pruned consumers — and because
-        # column pruning pushes through the aggregate, Catalyst compiled
-        # each consumer as its own aggregation over the checkpointed
-        # shingle RDD (the captured before-plan carries all four
-        # HashAggregate pairs and no ReusedExchange — the round-11
-        # ADVICE flagged exactly this). Carrying (bm, n) through the
-        # explode keeps ONE consumer per side, deletes the two verify
-        # hash joins, and is bounded at scale: this path only fires
-        # under the dense-dictionary cap, so bm is ≤ 64 longs per row
-        # replicated n_bands (4) ways. Same rows: identical candidate
-        # set (same witness), identical size/overlap/jaccard
-        # expressions evaluated pairwise either way.
-        a_side = wide_b.select(
-            F.col("doc_id").alias("id_a"),
-            F.col("bands").alias("bands_a"),
-            F.col("bm").alias("ba"),
-            F.col("n").alias("na"),
-            F.posexplode("bands").alias("band", "band_hash"),
-        )
-        b_side = wide_c.select(
-            F.col("doc_id").alias("id_b"),
-            F.col("bands").alias("bands_b"),
-            F.col("bm").alias("bb"),
-            F.col("n").alias("nb"),
-            F.posexplode("bands").alias("band", "band_hash"),
-        )
-        size_ok = F.least(F.col("na"), F.col("nb")) >= F.lit(threshold) * F.greatest(
-            F.col("na"), F.col("nb")
-        )
+    else:
+        wide_b = _band_hash_wide(rep_sh_b, num_hashes, rows_per_band)
+        wide_c = _band_hash_wide(rep_sh_c, num_hashes, rows_per_band)
+    # The bitmap and set size ride the band explode (optimization round
+    # 12): previously the witness-filtered candidates joined back to a
+    # union of the two fused tables, giving each side's aggregation TWO
+    # differently-pruned consumers — and because column pruning pushes
+    # through the aggregate, Catalyst compiled each consumer as its own
+    # aggregation over the checkpointed shingle RDD (the captured
+    # before-plan carries all four HashAggregate pairs and no
+    # ReusedExchange). Carrying (bm, n) through the explode keeps ONE
+    # consumer per side, deletes the two verify hash joins, and is
+    # bounded at scale: it only happens under the dense-dictionary cap,
+    # so bm is ≤ 64 longs per row replicated n_bands (4) ways.
+    bitmap = d_v is not None
+    cand = (
+        _band_side(wide_b, "a", bitmap)
+        .join(_band_side(wide_c, "b", bitmap), ["band", "band_hash"])
+        .filter(_first_agreeing_band())
+    )
+    if bitmap:
         # NOT spread: an explicit repartition of the candidate list here
         # (tried in optimization round 11) forces full materialization
         # of the witness-filtered pairs and breaks the band-join→verify
@@ -1005,55 +1009,9 @@ def minhash_near_dups_against(
         # wins. The shingle co-occurrence join measured 2.3x slower here
         # (small shared vocab makes co-occurrence near all-pairs), and
         # expanding cand x shingles OOM'd at sf1.0.
-        cand = (
-            a_side.join(b_side, ["band", "band_hash"])
-            .filter(first_agree == F.col("band") + 1)  # array_position is 1-indexed
-            .filter(size_ok)
-            .select("id_a", "id_b", "na", "nb", _bitmap_overlap_flat(n_words).alias("o"))
-        )
-        verified = (
-            _overlap_fence(cand, n_words)
-            .filter(F.col("o") > 0)
-            .select(
-                "id_a",
-                "id_b",
-                (F.col("o") / (F.col("na") + F.col("nb") - F.col("o"))).alias("jaccard"),
-            )
-        )
-    else:  # vocabulary over the cap: co-occurrence join fallback
-        wide_b = _band_hash_wide(rep_sh_b, num_hashes, rows_per_band)
-        wide_c = _band_hash_wide(rep_sh_c, num_hashes, rows_per_band)
-        a_side = wide_b.select(
-            F.col("doc_id").alias("id_a"),
-            F.col("bands").alias("bands_a"),
-            F.posexplode("bands").alias("band", "band_hash"),
-        )
-        b_side = wide_c.select(
-            F.col("doc_id").alias("id_b"),
-            F.col("bands").alias("bands_b"),
-            F.posexplode("bands").alias("band", "band_hash"),
-        )
-        cand = (
-            a_side.join(b_side, ["band", "band_hash"])
-            .filter(first_agree == F.col("band") + 1)  # array_position is 1-indexed
-            .select("id_a", "id_b")
-        )
-        nb = rep_sh_b.groupBy("doc_id").agg(F.count("*").alias("nb"))
-        nc = rep_sh_c.groupBy("doc_id").agg(F.count("*").alias("nc"))
-        verified = (
-            rep_sh_b.select(F.col("doc_id").alias("id_a"), "shingle")
-            .join(rep_sh_c.select(F.col("doc_id").alias("id_b"), "shingle"), "shingle")
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("o"))
-            .join(cand, ["id_a", "id_b"])
-            .join(nb.withColumnRenamed("doc_id", "id_a"), "id_a")
-            .join(nc.withColumnRenamed("doc_id", "id_b"), "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                (F.col("o") / (F.col("nb") + F.col("nc") - F.col("o"))).alias("jaccard"),
-            )
-        )
+        verified = _bitmap_jaccard(cand.filter(_size_bound(threshold)), n_words)
+    else:
+        verified = _shared_shingle_jaccard(rep_sh_b, rep_sh_c, cand.select("id_a", "id_b"))
     rep_best = (
         verified.filter(F.col("jaccard") >= threshold)
         .groupBy("id_a")
@@ -1079,10 +1037,7 @@ def ngram_near_dups(
     fingerprint-group cascade as minhash_near_dups (all-pairs verify runs
     on group representatives only)."""
     sh = shingles(df, id_col, text_col, shingle_size).localCheckpoint(eager=False)
-    groups = _fingerprint_groups(sh).localCheckpoint(eager=False)
-    rep_sh = sh.join(
-        groups.filter(F.col("doc_id") == F.col("rep")).select("doc_id"), "doc_id"
-    ).localCheckpoint(eager=False)
+    groups, rep_sh = _fingerprint_cascade(sh)
     rep_pairs = (
         jaccard_pairs(rep_sh, min_jaccard=threshold)
         .filter(F.col("jaccard") >= threshold)

@@ -269,11 +269,6 @@ def _huff_lut(encode: dict):
     return out
 
 
-def _extend(v: int, s: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map the s received bits to the signed value."""
-    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
 def decode_jpeg(b: bytes):
     """(width, height, px[h, w, 3] uint8) from a BASELINE JPEG blob.
 

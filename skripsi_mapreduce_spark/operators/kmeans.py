@@ -30,7 +30,9 @@ their partitions except for that one groupBy(cluster, word) shuffle,
 which Catalyst partial-aggregates map-side. Each iteration's plan reads
 the checkpointed vectors plus one constant, so plan depth stays O(1), not
 O(m). Past the cap, centroids move driver->executors as a BROADCAST table
-and each iteration's assignments are checkpointed. Distance uses the
+and each iteration's (doc_id, cluster, dist2) is checkpointed; both
+assignment kernels feed the same update aggregation, and the document
+vectors are the only table the whole run pins. Distance uses the
 sparse-safe expansion ||x||^2 + ||c||^2 - 2x.c (the reference's dense
 nested loop, MapperKMean.java:88-92, NPEs on missing keys — §8 Q10).
 """
@@ -41,7 +43,7 @@ import json
 import random
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -120,37 +122,43 @@ def kmeans(
     ``kmeans_ml``/``kmeans_fixedpoint``, whose centroids never leave the
     executors.
 
-    ``assignments`` is LAZY when the last iteration took the constant-centroid
-    path (the usual case): a map-only projection over the checkpointed
-    document vectors that recomputes the distances on each action.
-    Callers that read it more than once may checkpoint it themselves."""
+    ``assignments`` is LAZY. When the last iteration took the
+    constant-centroid path (the usual case) it is a map-only projection
+    over the checkpointed document vectors that recomputes the distances
+    on each action; on the join path it is a join of the checkpointed
+    (doc_id, cluster, dist2) with the checkpointed document vectors.
+    Callers that read it more than once may checkpoint it themselves.
+
+    ``max_iter <= 1`` (with the parity off-by-one): no iteration runs,
+    ``iterations`` is 0 and one pass assigns every document to the seed
+    centroids, which are returned unchanged with their SSE."""
     feats = features.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(word_col).alias("word"),
         F.col(weight_col).cast("double").alias("weight"),
     )
-    feats = feats.localCheckpoint(eager=True)  # reused every iteration
-
-    # Per-document sparse vector + ||x||^2, computed once. The entries
-    # array feeds the constant-centroid assign (distances map-side, no
-    # shuffle) and its centroid update; doc_norms feeds the join-based
-    # assign fallback.
-    # entries sorted by word: the constant-centroid dot product folds over
-    # this array, and a canonical fold order keeps dist2 ULP-identical
-    # across runs/partitionings (collect_list order is shuffle luck)
+    # Per-document sparse vector + ||x||^2: the only pinned table. It feeds
+    # the seed centroids, both assignment kernels and the update. Entries
+    # are sorted by word: the constant-centroid dot product folds over this
+    # array, and a canonical fold order keeps dist2 ULP-identical across
+    # runs/partitionings (collect_list order is shuffle luck). The id probe
+    # rides the checkpoint's own job as an observation.
+    obs = Observation("kmeans_ids")
     docs_vec = (
         feats.groupBy("doc_id")
         .agg(
             F.array_sort(F.collect_list(F.struct("word", "weight"))).alias("entries"),
             F.sum(F.col("weight") * F.col("weight")).alias("x2"),
         )
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.min("doc_id").alias("lo"),
+            F.max("doc_id").alias("hi"),
+        )
         .localCheckpoint(eager=True)
     )
-    doc_norms = docs_vec.select("doc_id", "x2")
-
-    n_docs, min_id, max_id = doc_norms.agg(
-        F.count("*"), F.min("doc_id"), F.max("doc_id")
-    ).head()
+    n_docs, min_id, max_id = obs.get["n"], obs.get["lo"], obs.get["hi"]
     if min_id == 1 and max_id == n_docs:
         # dense 1..N ids (the reference's own ETL contract,
         # ReducerExtractTransform.java:36-39): seeded draw over ids
@@ -168,7 +176,7 @@ def kmeans(
         # sorted(positions) renumbered clusters differently per path
         pos2cluster = init_centroid_ids(n_docs, k, seed)
         ranked = assign_sequential_ids(
-            doc_norms.select("doc_id"), ["doc_id"], id_col="_pos"
+            docs_vec.select("doc_id"), ["doc_id"], id_col="_pos"
         )
         id2cluster = {
             r["doc_id"]: pos2cluster[r["_pos"]]
@@ -177,52 +185,41 @@ def kmeans(
     seed_ids = local_df(
         spark, [(d, c) for d, c in id2cluster.items()], "doc_id long, cluster int"
     )
-    centroids_df = feats.join(F.broadcast(seed_ids), "doc_id").select(
-        "cluster", "word", F.col("weight").alias("cweight")
-    )
-    centroids = _collect_centroids(centroids_df)
+    centroids: dict[int, dict[str, float]] = {}
+    for row in (
+        docs_vec.join(F.broadcast(seed_ids), "doc_id")
+        .select("cluster", F.inline("entries"))
+        .collect()
+    ):
+        centroids.setdefault(row["cluster"], {})[row["word"]] = row["weight"]
 
     limit = max_iter - 1 if parity_max_iter_off_by_one else max_iter
     history: list[dict[int, float]] = []
     converged = False
     iterations = 0
-    assignments = None
 
     # the constant-centroid path parses centroid maps from JSON, whose keys
     # are strings; other word types take the join path
     literal_words = isinstance(feats.schema["word"].dataType, T.StringType)
-    for _ in range(max(limit, 0)):
-        iterations += 1
+    # max_iter <= 1: the parity loop never runs, but one pass still assigns
+    # every document to the seed centroids and measures their SSE
+    for _ in range(max(limit, 1)):
         if literal_words and sum(len(v) for v in centroids.values()) <= CENTROID_LITERAL_CAP:
             # distances are computed map-side against the constant
-            # centroids and the update is ONE aggregation over the assigned
-            # vectors, so the iteration runs two jobs and checkpoints
-            # nothing; the assignments stay a lazy map-only projection
+            # centroids, so the iteration runs two jobs (the update's) and
+            # checkpoints nothing; the assignments stay a lazy map-only
+            # projection
             assigned = _assign_literal(docs_vec, centroids)
-            assignments = assigned.select("doc_id", "cluster", "dist2")
-            sizes, sse, new_centroid_rows = _update_literal(
-                assigned, len(centroids), max_centroid_entries
-            )
         else:
-            # localCheckpoint: assignments feed two aggregations + the next
-            # iteration; pin them once instead of recomputing the join, and
-            # cut lineage so plan depth stays O(1) across iterations.
-            assignments = _assign(spark, feats, doc_norms, centroids).localCheckpoint(
-                eager=True
-            )
-            new_rows = (
-                feats.join(assignments.select("doc_id", "cluster"), "doc_id")
-                .groupBy("cluster", "word")
-                .agg(F.sum("weight").alias("wsum"))
-            )
-            # one aggregation job for sizes + SSE (k rows collected)
-            stats = assignments.groupBy("cluster").agg(
-                F.count("*").alias("n"), F.sum("dist2").alias("sse")
-            ).collect()
-            sizes = {r["cluster"]: r["n"] for r in stats}
-            sse = {r["cluster"]: r["sse"] for r in stats}
-            new_centroid_rows = new_rows.limit(max_centroid_entries + 1).collect()
-        history.append(sse)
+            # the join kernel's result feeds the update and the final
+            # assignments: pin it once instead of recomputing the join,
+            # and cut lineage so plan depth stays O(1) across iterations
+            best = _assign(spark, docs_vec, centroids).localCheckpoint(eager=True)
+            assigned = best.join(docs_vec.select("doc_id", "entries"), "doc_id")
+        assignments = assigned.select("doc_id", "cluster", "dist2")
+        sizes, sse, new_centroid_rows = _update(
+            assigned, len(centroids), max_centroid_entries
+        )
         if len(new_centroid_rows) > max_centroid_entries:
             raise RuntimeError(
                 f"k-means centroid update exceeds max_centroid_entries="
@@ -231,6 +228,10 @@ def kmeans(
                 "vocabularies use kmeans_ml or kmeans_fixedpoint, whose "
                 "centroids stay distributed."
             )
+        if limit < 1:
+            break
+        iterations += 1
+        history.append(sse)
         new_centroids: dict[int, dict[str, float]] = {}
         for row in new_centroid_rows:
             c = row["cluster"]
@@ -246,14 +247,6 @@ def kmeans(
             break
         centroids = new_centroids
 
-    if assignments is None:  # max_iter <= 1: parity loop never runs
-        assignments = _assign(spark, feats, doc_norms, centroids)
-        sse = {
-            r["cluster"]: r["sse"]
-            for r in assignments.groupBy("cluster").agg(F.sum("dist2").alias("sse")).collect()
-        }
-    else:
-        sse = history[-1]
     return KMeansResult(
         assignments=assignments,
         centroids=centroids,
@@ -1395,11 +1388,12 @@ def _assign_literal(
     )
 
 
-def _update_literal(
+def _update(
     assigned: DataFrame, n_clusters: int, max_entries: int
 ) -> tuple[dict[int, int], dict[int, float], list]:
-    """The constant-centroid path's update step: ONE aggregation over the
-    assigned vectors, collected in one bounded job. Returns (sizes, SSE,
+    """The update step of either assignment kernel: ONE aggregation over
+    the assigned vectors (``cluster``, ``dist2`` and the document's
+    ``entries``), collected in one bounded job. Returns (sizes, SSE,
     centroid-sum rows (cluster, word, wsum)).
 
     Each document contributes its entries under (cluster, word) plus two
@@ -1410,7 +1404,10 @@ def _update_literal(
     centroid sums (a count column would widen every row). Every sum runs
     over the same rows in the same order as separate aggregations would,
     so the values are bit-identical to them."""
-    no_word = F.lit(None).cast("string")
+    # the sentinel's NULL word takes the entries' word type: a string NULL
+    # would make concat coerce integer words to strings
+    word_type = assigned.schema["entries"].dataType.elementType["word"].dataType
+    no_word = F.lit(None).cast(word_type)
     sentinels = F.array(
         F.struct(no_word.alias("word"), F.lit(1.0).alias("weight")),
         F.struct(no_word.alias("word"), F.col("dist2").alias("weight")),
@@ -1441,21 +1438,13 @@ def _update_literal(
     return sizes, sse, centroid_rows
 
 
-def _collect_centroids(centroids_df: DataFrame) -> dict[int, dict[str, float]]:
-    out: dict[int, dict[str, float]] = {}
-    for row in centroids_df.collect():
-        out.setdefault(row["cluster"], {})[row["word"]] = row["cweight"]
-    return out
-
-
 def _converged(old: dict[int, dict[str, float]], new: dict[int, dict[str, float]]) -> bool:
     return all(new.get(c) == old[c] for c in old)
 
 
 def _assign(
     spark: SparkSession,
-    feats: DataFrame,
-    doc_norms: DataFrame,
+    docs_vec: DataFrame,
     centroids: dict[int, dict[str, float]],
 ) -> DataFrame:
     """One assignment pass: (doc_id, cluster, dist2) for every document.
@@ -1463,8 +1452,9 @@ def _assign(
     dist2(x, c) = ||x||^2 + ||c||^2 - 2 x.c over sparse rows: the dot
     product only needs words the document actually has (join on word with
     the broadcast centroid table); documents sharing no word with a
-    centroid still get a row via the doc_norms x centroid_norms cross
-    (k rows broadcast — BroadcastNestedLoopJoin, no shuffle of the docs).
+    centroid still get a row via the (doc_id, ||x||^2) x centroid_norms
+    cross (k rows broadcast — BroadcastNestedLoopJoin, no shuffle of the
+    docs).
     """
     c_rows = [
         (c, w, wt) for c, vec in centroids.items() for w, wt in vec.items()
@@ -1476,11 +1466,12 @@ def _assign(
         "cluster int, c2 double",
     )
     dots = (
-        feats.join(F.broadcast(c_df), "word")
+        docs_vec.select("doc_id", F.inline("entries"))
+        .join(F.broadcast(c_df), "word")
         .groupBy("doc_id", "cluster")
         .agg(F.sum(F.col("weight") * F.col("cweight")).alias("dot"))
     )
-    all_pairs = doc_norms.crossJoin(F.broadcast(c_norms))
+    all_pairs = docs_vec.select("doc_id", "x2").crossJoin(F.broadcast(c_norms))
     dist = (
         all_pairs.join(dots, ["doc_id", "cluster"], "left")
         .withColumn("dot", F.coalesce(F.col("dot"), F.lit(0.0)))

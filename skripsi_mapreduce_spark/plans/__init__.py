@@ -10,41 +10,47 @@ from . import extensions3  # noqa: F401  (registers into QUERIES/ORACLE)
 # entries in dict order (every round so far cut at exactly position 50).
 # Rotate so every entry's freshest driver-green row stays recent.
 #
-# Round 12 head (executes the r11 verdict's rotation ledger + its "Next
-# round" item 1 verbatim):
-#  (0) the four r11-REWRITTEN dedup kernels that shipped without an r11
-#      driver-green row (the fused signature aggregation, the
-#      cap-bounded bitmap dictionary, the single-pin SimHash self-join
-#      — r11 verdict "what's wrong" item 1): dedup_minhash,
-#      dedup_ngram_jaccard, dedup_incremental, dedup_simhash;
-#  (a) 46 of the 47 entries whose freshest driver-green row is r9 —
-#      the stalest evidence outside the head (dedup_prefix_jaccard ...
-#      q52_cube; this block also contains dedup_group_keep,
-#      dedup_cross_corpus and stream_enrich, the other entries the r11
-#      verdict named). sim_topk_many (the last of the r9 block) defers
-#      to the top of the r13 fill pool — the head budget is a hard 50.
+# Round 13 head:
+#  (0) the five MinHash/n-gram dedup entries whose kernels were
+#      restructured this round (one copy of each cascade, band-join and
+#      verify step): dedup_minhash, dedup_ngram_jaccard,
+#      dedup_prefix_jaccard, dedup_group_keep, dedup_incremental;
+#  (1) the eight kernels changed in r12 that have no driver-green row
+#      (kmeans_documents ... graph_components) plus sim_topk_many, the
+#      r9-green entry r12 deferred;
+#  (2) fill: dedup_simhash and 35 entries of the r9-green block (the
+#      stalest evidence before r12). The block's other nine entries,
+#      whose freshest rows are r12's, move to the tail so the head stays
+#      at exactly 50.
 #
-# Round-12 VALUE-IDENTICAL optimization touches stay in the tail under
-# the r8/r11 precedent (row-identity pinned by the sf0.001 oracle suite
-# every pytest run + four-config driver_sim sweeps per commit); any
-# entry whose KERNEL is rewritten this round and is not already in this
-# head gets swapped in before round end.
+# Value-identical optimization touches stay in the tail under the r8/r11
+# precedent (row-identity pinned by the sf0.001 oracle suite every
+# pytest run + four-config driver_sim sweeps per commit); any entry
+# whose KERNEL is rewritten in a round and is not already in this head
+# gets swapped in before round end.
 #
-# Freshness ledger after r12 (for the round-13 rotation): head-50 carry
-# r12 evidence; _TAIL lists sim_topk_many (r9-green, deferred — r13's
-# FIRST fill) then the 45 r10-green entries (the r10 block minus the
-# four dedup kernels promoted above) then the 50 r11-green entries
-# (the r11 head). r13 head = any r13-changed kernels + sim_topk_many +
-# the r10 block, then r11 fill to exactly 50.
+# Freshness ledger after r13: head-50 carry r13 evidence; _TAIL lists
+# the r10-green entries, then the r11-green ones (the r11 head), then
+# the nine r12-green entries demoted from the r12 head.
 _PROMOTED = [
-    # (0) r11-rewritten dedup kernels — adjudicate the fused-signature
-    # and single-pin-simhash rewrites (r11 verdict item 1)
+    # (0) this round's restructured dedup kernels
     "dedup_minhash",
     "dedup_ngram_jaccard",
-    "dedup_incremental",
-    "dedup_simhash",
-    # (a) the 46-entry r9-green block — the stalest driver evidence
     "dedup_prefix_jaccard",
+    "dedup_group_keep",
+    "dedup_incremental",
+    # (1) r12-changed kernels without a driver-green row + sim_topk_many
+    "kmeans_documents",
+    "emb_kmeans",
+    "ta_cluster_keywords",
+    "stream_semantic_incremental",
+    "dedup_semantic",
+    "dedup_semantic_keep",
+    "dedup_semantic_incremental",
+    "graph_components",
+    "sim_topk_many",
+    # (2) fill: the stalest driver evidence
+    "dedup_simhash",
     "sim_index_incremental_pq",
     "stream_bm25_topk",
     "sim_topk_many_ivfpq_rerank",
@@ -80,34 +86,17 @@ _PROMOTED = [
     "profile_lineitem",
     "skew_salted_agg",
     "range_join_pairs",
-    "rollup_events",
-    "pipe_contamination",
-    "q45_apply_changes",
-    "ta_bigram_lp",
-    "q50_udtf_bigrams",
-    "mix_negatives",
-    "dedup_group_keep",
-    "q51_fuzzy_match",
-    "stream_enrich",
-    "q52_cube",
 ]
 _TAIL = [
-    # green r9 — deferred from the head (hard 50 budget); r13's first fill
-    "sim_topk_many",
-    # green r10 — the r10 block minus the four dedup kernels promoted above
+    # green r10
     "ta_bm25_incremental",
     "sim_recall_many_ivfpq",
-    "stream_semantic_incremental",
-    "emb_kmeans",
-    "dedup_semantic",
-    "dedup_semantic_keep",
     "tfidf_longform",
     "sketch_bloom",
     "mix_temperature",
     "stream_interval_join",
     "stream_sliding",
     "stream_dedup",
-    "graph_components",
     "cdc_scd2",
     "skew_salted_join",
     "cdc_incremental_agg",
@@ -139,21 +128,18 @@ _TAIL = [
     "q53_zorder_layout",
     "sketch_kmv_intersect",
     "mm_image_near_dups",
-    "ta_fit_classifier",
     # green r11 — the r11 head
+    "ta_fit_classifier",
     "mm_image_decode",
     "emb_feature_hashing",
     "graph_pagerank",
-    "kmeans_documents",
     "dedup_jaccard_autoselect",
-    "dedup_semantic_incremental",
     "mm_audio_near_dups",
     "mm_image_dedup_incremental",
     "mm_video_near_dups",
     "ta_collocations",
     "pipe_pii_scrub",
     "stream_sim_topk",
-    "ta_cluster_keywords",
     "sim_index_incremental",
     "sim_topk_many_ivf",
     "q19_set_ops",
@@ -191,6 +177,16 @@ _TAIL = [
     "q06_inner_join",
     "q07_tpch_q5",
     "q08_left_join",
+    # green r12 — demoted from the r12 head
+    "rollup_events",
+    "pipe_contamination",
+    "q45_apply_changes",
+    "ta_bigram_lp",
+    "q50_udtf_bigrams",
+    "mix_negatives",
+    "q51_fuzzy_match",
+    "stream_enrich",
+    "q52_cube",
 ]
 
 

@@ -60,24 +60,6 @@ def dec(c) -> F.Column:
     return col.cast(DEC)
 
 
-def rnd4(col) -> F.Column:
-    """Final wrap for non-integer numeric outputs: ROUND(x,4)::DECIMAL(20,4)."""
-    return F.round(col, 4).cast(DEC)
-
-
-def rnd_exact4(col) -> F.Column:
-    """Cross-engine EXACT 4dp rounding for computed double ratios:
-    round-to-integer after scaling, then exact decimal rescale (see
-    functions/numeric.py for the full rationale; the SQL twin is
-    ``rnd_exact4_sql``). Use for small-rational ratios — averages, count
-    ratios, Jaccard — where plain ROUND(double, 4) can diverge between
-    engines at half-boundaries like 3/160 = 0.01875."""
-    scaled = F.round(col * 10000).cast("long").cast("decimal(24,4)")
-    return (scaled / 10000).cast(DEC)
-
-
-
-
 # ---------------------------------------------------------------------------
 # Q01 scan + project (reference O1, O9, O15)
 # ---------------------------------------------------------------------------

@@ -14,14 +14,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _has_class(spark: SparkSession, cls: str) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(cls)  # type: ignore[union-attr]
-        return True
-    except Exception:
-        return False
-
-
 def avro_available(spark: SparkSession) -> bool:
     """spark-avro is a separate package; absent in this container.
 

@@ -973,6 +973,32 @@ def test_incremental_verdicts_semantics(spark):
     assert out == {10: 1.0, 11: 1.0}
 
 
+def test_incremental_over_cap_arm_matches_dictionary_arm(spark, monkeypatch):
+    """Past the dense-dictionary cap, minhash_near_dups_against verifies
+    its band-join candidates with the candidate-restricted shared-shingle
+    join instead of bitmaps. Both arms must return the same verdicts on a
+    corpus with exact and near copies."""
+    from skripsi_mapreduce_spark.io import load_table
+
+    docs = load_table(spark, SF_DIR, "documents")
+    corpus = docs.filter(F.col("doc_id") % 5 != 0)
+    batch = docs.filter(F.col("doc_id") % 5 == 0)
+    kw = dict(threshold=0.8, num_hashes=16, rows_per_band=4)
+    dictionary = sorted(map(tuple, dd.minhash_near_dups_against(corpus, batch, **kw).collect()))
+
+    calls = []
+    shared = dd._shared_shingle_jaccard
+    monkeypatch.setattr(dd, "BITMAP_MAX_VOCAB", 1)
+    monkeypatch.setattr(
+        dd, "_shared_shingle_jaccard", lambda *a: calls.append(1) or shared(*a)
+    )
+    over_cap = sorted(map(tuple, dd.minhash_near_dups_against(corpus, batch, **kw).collect()))
+    assert calls, "the over-cap arm was not taken"
+    assert over_cap == dictionary
+    verdicts = {j for _, j in dictionary}
+    assert 1.0 in verdicts and any(j < 1.0 for j in verdicts)
+
+
 def test_dup_edges_on_transitive_chain(spark):
     """Chained near-dups (doc_i ~ doc_{i+1} but doc_0 !~ doc_k): the
     keep-list must close transitively — every chain member maps to the

@@ -156,20 +156,61 @@ def test_kmeans_literal_path_matches_join_path(spark, monkeypatch):
             assert hl[c] == pytest.approx(hj[c], rel=1e-9)
 
 
-def test_kmeans_non_string_words_match_string_words(spark, features):
+def test_kmeans_non_string_words_match_string_words(spark, features, monkeypatch):
     """Centroid maps travel as JSON, whose keys are strings, so integer
     words take the join path; they must cluster exactly like the same
-    corpus with string words."""
+    corpus with string words, whether the string words take the
+    constant-centroid path or (cap 0) the join path too. The shared
+    update must keep integer words integers."""
+    from skripsi_mapreduce_spark.operators import kmeans as km
+
     words = sorted(r["word"] for r in features.select("word").distinct().collect())
     ids = spark.createDataFrame(list(enumerate(words)), "word_id int, word string")
     int_feats = features.join(ids, "word").select("doc_id", F.col("word_id").alias("word"), "weight")
-    a = kmeans(spark, features, k=3, max_iter=10, seed=42)
-    b = kmeans(spark, int_feats, k=3, max_iter=10, seed=42)
-    assert {r["doc_id"]: r["cluster"] for r in a.assignments.collect()} == {
-        r["doc_id"]: r["cluster"] for r in b.assignments.collect()
-    }
-    assert a.centroids == {c: {words[w]: v for w, v in vec.items()} for c, vec in b.centroids.items()}
-    assert a.iterations == b.iterations
+    for cap in (km.CENTROID_LITERAL_CAP, 0):
+        monkeypatch.setattr(km, "CENTROID_LITERAL_CAP", cap)
+        a = kmeans(spark, features, k=3, max_iter=10, seed=42)
+        b = kmeans(spark, int_feats, k=3, max_iter=10, seed=42)
+        assert {r["doc_id"]: r["cluster"] for r in a.assignments.collect()} == {
+            r["doc_id"]: r["cluster"] for r in b.assignments.collect()
+        }
+        assert a.centroids == {
+            c: {words[w]: v for w, v in vec.items()} for c, vec in b.centroids.items()
+        }
+        assert a.iterations == b.iterations
+
+
+@pytest.mark.parametrize("literal_cap", [None, 0])
+def test_kmeans_single_pass_assigns_to_seeds(spark, corpus, features, monkeypatch, literal_cap):
+    """max_iter=1: the parity loop never runs, so the centroids are the
+    seed documents' vectors and every document sits at its nearest seed,
+    on both assignment kernels (cap 0 forces the join kernel)."""
+    from skripsi_mapreduce_spark.operators import kmeans as km
+
+    if literal_cap is not None:
+        monkeypatch.setattr(km, "CENTROID_LITERAL_CAP", literal_cap)
+    res = kmeans(spark, features, k=3, max_iter=1, seed=42)
+    vecs: dict[int, dict[str, float]] = {}
+    for r in features.collect():
+        vecs.setdefault(r["doc_id"], {})[r["word"]] = r["weight"]
+    seeds = init_centroid_ids(len(corpus), 3, seed=42)
+    assert res.iterations == 0 and not res.converged and res.history == []
+    assert res.centroids == {c: vecs[d] for d, c in seeds.items()}
+
+    def dist2(x, c):
+        return sum((x.get(w, 0.0) - c.get(w, 0.0)) ** 2 for w in set(x) | set(c))
+
+    got = {r["doc_id"]: (r["cluster"], r["dist2"]) for r in res.assignments.collect()}
+    assert set(got) == set(vecs)
+    sse: dict[int, float] = {}
+    for d, (c, d2) in got.items():
+        dists = {k: dist2(vecs[d], cv) for k, cv in res.centroids.items()}
+        assert dists[c] <= min(dists.values()) + 1e-9, (d, c, dists)
+        assert d2 == pytest.approx(dists[c], rel=1e-9, abs=1e-12)
+        sse[c] = sse.get(c, 0.0) + d2
+    assert res.sse.keys() == sse.keys()
+    for c in sse:
+        assert res.sse[c] == pytest.approx(sse[c], rel=1e-9)
 
 
 def test_kmeans_literal_iteration_runs_two_jobs(spark, features):

@@ -255,6 +255,36 @@ def test_dedup_bitmap_dictionary_no_single_partition(spark):
         assert "Exchange SinglePartition" not in formatted_plan(spark, name), name
 
 
+@pytest.mark.parametrize(
+    "kernel, exchanges, aggregates",
+    [("minhash_dup_edges", 2, 0), ("minhash_near_dups_against", 10, 4)],
+)
+def test_minhash_kernel_plan_shape(spark, kernel, exchanges, aggregates):
+    """Plan-shape budget for the two near-dedup kernels the benchmark
+    runs: an aggregation compiled twice for differently-pruned consumers
+    (each side's signature aggregation once had two) shows up here as
+    extra Exchange and HashAggregate nodes."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from skripsi_mapreduce_spark.io import load_table
+    from skripsi_mapreduce_spark.operators import dedup as dd
+
+    docs = load_table(spark, SF_DIR, "documents")
+    if kernel == "minhash_dup_edges":
+        df = dd.minhash_dup_edges(docs)
+    else:
+        corpus = docs.filter(F.col("doc_id") % 5 != 0)
+        batch = docs.filter(F.col("doc_id") % 5 == 0)
+        df = dd.minhash_near_dups_against(corpus, batch)
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    assert len(re.findall(r"\bExchange\b", plan)) == exchanges
+    assert len(re.findall(r"HashAggregate", plan)) == aggregates
+
+
 def test_bloom_probe_is_broadcast_join(spark):
     """The Bloom bit table (≤ m rows) must reach the probe side as a
     broadcast — a shuffled probe would defeat the sketch's purpose as a

@@ -68,7 +68,7 @@ def main() -> None:
         return out.count(), cands.count()
 
     def lsh_arm():
-        out = minhash_near_dups(df, threshold=t, cascade=True)
+        out = minhash_near_dups(df, threshold=t)
         return out.count(), None
 
     results = {}
@@ -85,7 +85,7 @@ def main() -> None:
     truth = jaccard_pairs(
         sh, prefix_candidates(sh, t), bitmap_max_vocab=0, min_jaccard=t
     ).filter(F.col("jaccard") >= t)
-    lsh = minhash_near_dups(df, threshold=t, cascade=True)
+    lsh = minhash_near_dups(df, threshold=t)
     missed = truth.join(lsh.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti").count()
     results["n_docs"] = n_docs
     results["threshold"] = t
