@@ -120,8 +120,10 @@ class _Cluster:
         return kmeans(self._eng.spark, features, k=k, max_iter=max_iter, seed=seed, **kw)
 
     def kmeans_fixedpoint(self, weights: DataFrame, k: int = 5, **kw) -> DataFrame:
-        """Oracle-exact int64 Lloyd over e4-scaled weights (md5-min init,
-        fixed assignment passes); centroids never touch the driver."""
+        """Oracle-exact int64 Lloyd over e4-scaled weights (md5-first
+        init, fixed assignment passes). Centroids stay distributed past
+        the driver-collect bound; ``output`` picks the summary or the
+        (lazy) assignments. See operators.kmeans.kmeans_fixedpoint."""
         from .operators.kmeans import kmeans_fixedpoint
 
         return kmeans_fixedpoint(weights, k=k, **kw)

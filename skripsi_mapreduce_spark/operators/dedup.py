@@ -1526,15 +1526,11 @@ def semantic_incremental(
     offsets planted ids by max+1)."""
     import math
 
-    from ..functions.numeric import e_int
-    from .kmeans import assign_with_model, kmeans_fixedpoint_ivf_model
+    from .kmeans import assign_with_model, dense_e4_long_form, kmeans_fixedpoint_ivf_model
 
     if k == "auto":
         k = max(2, math.ceil(corpus.count() / target_cluster_size))
-    w = corpus.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(vec_col).alias("word", "x"),
-    ).select("doc_id", "word", e_int(F.col("x").cast("double"), 4).alias("x_e4"))
+    w = dense_e4_long_form(corpus, id_col, vec_col)
     dense_c = corpus.select(
         F.col(id_col).cast("long").alias("doc_id"), F.col(vec_col).alias("vec")
     )
@@ -1614,13 +1610,9 @@ def semantic_assignments(
     """(doc_id, cluster): the clustering stage shared by
     :func:`semantic_near_dups` and :func:`semantic_keep` — e4-quantized
     long form into the hierarchical (or exact) fixed-point K-Means."""
-    from ..functions.numeric import e_int
-    from .kmeans import kmeans_fixedpoint, kmeans_fixedpoint_ivf
+    from .kmeans import dense_e4_long_form, kmeans_fixedpoint, kmeans_fixedpoint_ivf
 
-    w = emb.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(vec_col).alias("word", "x"),
-    ).select("doc_id", "word", e_int(F.col("x").cast("double"), 4).alias("x_e4"))
+    w = dense_e4_long_form(emb, id_col, vec_col)
     if assign == "ivf":
         if n_assign_passes != 2:
             raise ValueError(

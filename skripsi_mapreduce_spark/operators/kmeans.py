@@ -35,6 +35,24 @@ assignment kernels feed the same update aggregation, and the document
 vectors are the only table the whole run pins. Distance uses the
 sparse-safe expansion ||x||^2 + ||c||^2 - 2x.c (the reference's dense
 nested loop, MapperKMean.java:88-92, NPEs on missing keys — §8 Q10).
+
+The oracle-exact fixed-point family — ``kmeans_fixedpoint`` (exact
+Lloyd), ``kmeans_fixedpoint_ivf`` (IVF-assigned, for k that grows with
+the corpus), ``kmeans_fixedpoint_ivf_model`` and ``assign_with_model``
+(a frozen model for later batches) — keeps the same semantics in int64
+arithmetic so a SQL oracle replays it bit-for-bit. Its tiers differ
+only in how a step runs, and each step is written once: the md5 seed
+order (``similarity._md5_first``; ``_md5_key`` is its driver-side
+twin), the squared norms (``_x2``, ``_sq_norms``), the argmin
+(``_nearest``, shared with the join kernel above), the update
+(``_centroid_update``) and the fine->coarse quantization
+(``_quantize``); on the numpy side the matrix builder
+(``_rows_matrix``), the e4 batch quantizer (``_e4_batch``), the
+coarse-list ranking (``_rank_lists``) and the int64 argmin
+(``_nearest_numpy``). Tiers are picked from the input, never by a
+caller option: the pivot kernel up to ``_PIVOT_MAX_K`` clusters, driver-
+held centroids up to ``_CENT_COLLECT_MAX`` rows, the fused IVF kernel
+up to ``_FUSED_MAX_CELLS`` fine-codebook cells.
 """
 
 from __future__ import annotations
@@ -43,11 +61,13 @@ import json
 import random
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..io import local_df
+from .similarity import _md5_first, _md5_key, _round_half_away
 
 
 # Past this many total (cluster, word) centroid entries, assignment falls
@@ -265,67 +285,51 @@ def kmeans_fixedpoint(
     word_col: str = "word",
     weight_col: str = "w_e4",
     output: str = "summary",
-    assign_kernel: str = "auto",
-    persist_weights: bool = True,
 ) -> DataFrame:
     """Oracle-exact Lloyd over FIXED-POINT features — every number in the
     whole algorithm is an int64, so a SQL oracle (DuckDB) reproduces it
     bit-for-bit with zero float hazards. Semantics:
 
     - input weights are e4-scaled integers (``round(w * 10^4)``);
-    - init: the k documents with the smallest ``(md5(doc_id), doc_id)``
-      become centroids 0..k-1 (engine-portable replacement for the seeded
-      RNG draw of the parity path — JobExtractFeature.java:143-158 O26 —
-      which no SQL engine can replay);
+    - init: the k documents first in the ``(md5(doc_id), doc_id)`` order
+      (:func:`~.similarity._md5_first`) become centroids 0..k-1
+      (engine-portable replacement for the seeded RNG draw of the parity
+      path — JobExtractFeature.java:143-158 O26 — which no SQL engine can
+      replay);
     - distances: dist2_e8 = ||x||² + ||c||² − 2·x·c over the scaled ints
       (exact, order-independent — integer addition commutes, unlike the
       float sums the parity path uses);
     - argmin tie-break: lowest cluster index (O32);
     - update: per-(cluster, word) mean rounded HALF_UP at e4 via pure
       integer arithmetic ``(2·s + n) div (2·n)`` (the O33 rounding rule,
-      at e4 instead of 10dp); zero entries dropped (no effect on dist);
+      at e4 instead of 10dp; :func:`_centroid_update`); zero entries
+      dropped (no effect on dist);
     - fixed ``n_assign_passes`` assignment passes (no convergence test —
       deterministic work, same every run);
     - returns the per-cluster summary (cluster, n_members, sse_e8) of the
       LAST assignment pass.
 
-    Scale: centroids (k × active vocab) travel as a broadcast table; per
-    pass the docs shuffle once for the dot-product groupBy and once for
-    the update groupBy, both map-side partial-aggregated. No centroid
-    VECTOR ever materializes on the driver; the bounded collects are the
-    k-row seed pick and (pivot kernel) the k-long ‖c‖² table.
+    Scale: per pass the docs shuffle once for the dot-product groupBy and
+    once for the update groupBy, both map-side partial-aggregated. The
+    assignment kernel follows k: up to ``_PIVOT_MAX_K`` clusters one
+    groupBy(doc_id).pivot(cluster) computes every per-cluster dot as a
+    column (:func:`_assign_fixedpoint_pivot`); past it the pivot would be
+    too wide and the (doc_id, cluster)-keyed join form
+    (:func:`_assign_fixedpoint`) runs. Both are bit-equal (pinned by
+    test). The pivot kernel holds the centroids on the driver while they
+    fit ``_CENT_COLLECT_MAX`` rows and checkpoints them otherwise; the
+    join kernel broadcasts them. Past 4 passes each pass's assignment
+    and centroids are lazily checkpointed to cut the lineage.
 
-    ``assign_kernel``: ``"pivot"`` computes each pass's per-cluster dots
-    as ONE groupBy(doc_id).pivot(cluster) aggregation and the argmin as
-    a row expression (k columns wide — right up to a few thousand
-    clusters); ``"join"`` keeps the (doc_id, cluster)-keyed join form
-    for huge k. ``"auto"`` picks pivot at k ≤ 256. Both are bit-equal
-    (pinned by test).
-
-    ``persist_weights=True`` (the default) registers a
-    MEMORY_AND_DISK cache of the weights projection. For the
-    ``summary`` and ``assignments`` outputs the cache is RELEASED
-    before returning (both materialize their result eagerly — k rows /
-    an eager checkpoint — so the last cache consumer is known; no net
-    persisted blocks survive the call, pinned by test). Only
-    ``assignments_lazy`` keeps the cache for the session (its whole
-    point is deferring the Lloyd chain into the single consumer's first
-    action, so the last consumer is unknowable here): long-lived
-    sessions cycling many corpora through that mode should
-    ``spark.catalog.clearCache()`` between runs, or pass
-    ``persist_weights=False`` when the caller already caches the
-    (doc_id, word, weight) projection itself."""
-    # feeds seeds, norms, and every pass. persist (not an eager
-    # localCheckpoint): the first action — pass 0's seed-rows collect —
-    # materializes the cache as a side effect, so the dedicated
-    # checkpoint job (plus its plan->RDD conversion of the whole input)
-    # disappears from the chain; every later consumer reads the
-    # in-memory columnar blocks. MEMORY_AND_DISK so a huge weights table
-    # spills instead of recomputing the upstream TF-IDF per pass.
-    # Lifetime: released before returning on the summary/assignments
-    # outputs (their results materialize eagerly, so the last cache
-    # consumer is known — round-9 verdict); session-lifetime only on
-    # assignments_lazy, see the docstring.
+    ``output``: ``summary`` (default) or ``assignments`` (doc_id,
+    cluster, dist2) of the last pass, both materialized by an eager
+    checkpoint; or ``assignments_lazy``, the same table as the raw lazy
+    plan for a SINGLE consumer, whose first action runs the Lloyd chain
+    inline exactly once. The eager outputs cache the weights projection
+    (MEMORY_AND_DISK) for the passes and release the cache before
+    returning; the lazy output caches nothing, since its last consumer is
+    unknown here — a caller that reads the weights again caches them
+    itself, as ``ta_cluster_keywords`` does."""
     from pyspark import StorageLevel
 
     w = weights.select(
@@ -333,11 +337,17 @@ def kmeans_fixedpoint(
         F.col(word_col).alias("word"),
         F.col(weight_col).cast("long").alias("w"),
     )
-    if persist_weights:
+    lazy = output == "assignments_lazy"
+    if not lazy:
+        # persist, not an eager localCheckpoint: the first action (pass
+        # 0's seed collect) fills the cache, so no dedicated checkpoint
+        # job or plan->RDD conversion of the whole input; MEMORY_AND_DISK
+        # so a huge weights table spills instead of recomputing the
+        # upstream TF-IDF per pass
         w = w.persist(StorageLevel.MEMORY_AND_DISK)
 
     spark = weights.sparkSession
-    pivot = assign_kernel == "pivot" or (assign_kernel == "auto" and k <= 256)
+    pivot = k <= _PIVOT_MAX_K
     cent_schema = T.StructType(
         [
             T.StructField("cluster", T.IntegerType()),
@@ -345,205 +355,145 @@ def kmeans_fixedpoint(
             T.StructField("cw", T.LongType()),
         ]
     )
-    seed_pick = (
-        w.select("doc_id")
-        .distinct()
-        .orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id")
-        .limit(k)
-    )
-    # `collected`: the CURRENT centroid table as local (cluster, word,
-    # cw) rows when it is known small — the pivot fast path (see the
-    # pass loop). Seeding collects the k seed docs' weight ROWS in one
-    # job and derives the (md5, doc_id) seed order driver-side with the
-    # identical rule (hashlib md5 of the decimal string == Spark
-    # md5(cast as string)) — folding the old separate seed-id collect
-    # into pass 0's centroid collect.
-    collected: list[tuple] | None = None
-    probe_small = True  # once a probe comes back oversize, stop probing:
-    # the centroid table stays ~k x active-vocab rows across passes, so
-    # a second probe would just re-run the chain and discard it again
-    cent = None
-    if pivot:
-        rows0 = w.join(seed_pick, "doc_id").limit(_CENT_COLLECT_MAX + 1).collect()
-        if len(rows0) > _CENT_COLLECT_MAX:
-            probe_small = False
-        else:
-            import hashlib
-
-            order = sorted(
-                {int(r["doc_id"]) for r in rows0},
-                key=lambda d: (hashlib.md5(str(d).encode()).hexdigest(), d),
-            )
-            cl = {d: i for i, d in enumerate(order)}
-            collected = [
-                (cl[int(r["doc_id"])], r["word"], int(r["w"])) for r in rows0
-            ]
-    if collected is None:
-        seed_rows = seed_pick.collect()
-        seed_df = local_df(
-            spark,
-            [(r["doc_id"], i) for i, r in enumerate(seed_rows)],
-            "doc_id long, cluster int",
-        )
-        cent = w.join(F.broadcast(seed_df), "doc_id").select(
-            "cluster", "word", F.col("w").alias("cw")
-        )
+    ids = w.select("doc_id").distinct()
+    # `rows`: the current centroids as local (cluster, word, cw) tuples
+    # while the table is small. The pivot kernel then reads them as a
+    # local table with exact Python ||c||^2 ints, which saves the eager
+    # checkpoint job and the ||c||^2 collect job per pass (measured 2
+    # jobs/pass off kmeans_documents at sf0.1). Pass 0 collects the seed
+    # docs' weight rows and ranks them with the md5 twin, which folds the
+    # seed-id collect in. After one oversize collect no later pass
+    # tries again: the table stays ~k x active-vocab rows across passes.
+    rows = _collect_small(w.join(_md5_first(ids, k), "doc_id")) if pivot else None
+    probe = rows is not None
+    if rows is not None:
+        order = sorted({d for d, _, _ in rows}, key=_md5_key)
+        rank = {d: i for i, d in enumerate(order)}
+        rows = [(rank[d], word, x) for d, word, x in rows]
+    else:
+        cent = _seed_centroids(w, ids, k)
     # lineage cuts only pay for themselves on DEEP loops: each lazy
     # localCheckpoint costs real RDD-conversion time (measured ~0.5-1s
     # total at sf0.1) while Catalyst's ReusedExchange already serves the
     # repeated d2/cent subtrees from one shuffle when the plan is
     # shallow — same finding as components.pagerank_e8
     deep = n_assign_passes > 4
-    d2 = w.groupBy("doc_id").agg(F.sum(F.col("w") * F.col("w")).alias("x2"))
+    d2 = _x2(w)
     if deep:
         d2 = d2.localCheckpoint(eager=False)  # cached at first use, reused per pass
 
-    assign = None
     for p in range(max(n_assign_passes, 1)):
-        if pivot:
-            # the cent chain has multiple consumers per pass (||c||^2,
-            # the dot pivot, and the pass-final action). When the k x
-            # active-vocab table is SMALL, one limit-guarded collect
-            # replaces BOTH the eager checkpoint job and the pivot
-            # kernel's ||c||^2 collect job: centroids become a literal
-            # broadcast DataFrame and ||c||^2 exact Python ints
-            # (bit-equal - same rows, same integer arithmetic; measured
-            # 2 jobs/pass off kmeans_documents at sf0.1, plus the
-            # seed-id job folded into pass 0's collect). Past the cap
-            # the checkpoint form stands (k x vocab can be millions of
-            # rows at huge vocab - never collect unbounded state).
-            if collected is None and probe_small:
-                rows = cent.limit(_CENT_COLLECT_MAX + 1).collect()
-                if len(rows) > _CENT_COLLECT_MAX:
-                    probe_small = False
-                else:
-                    collected = [
-                        (int(r["cluster"]), r["word"], int(r["cw"])) for r in rows
-                    ]
-            if collected is not None:
-                cent = local_df(spark, collected, cent_schema)
-                c2: dict[int, int] = {}
-                for c, _word, cw in collected:
-                    c2[c] = c2.get(c, 0) + cw * cw
-                assign = _assign_fixedpoint_pivot(w, d2, cent, c2=c2)
-            else:
-                cent = cent.localCheckpoint(eager=True)
-                assign = _assign_fixedpoint_pivot(w, d2, cent)
-        else:
+        if not pivot:
             assign = _assign_fixedpoint(w, d2, cent)
+        else:
+            if rows is None and probe:
+                rows = _collect_small(cent)
+                probe = rows is not None
+            if rows is not None:
+                cent = local_df(spark, rows, cent_schema)
+                c2: dict[int, int] = {}
+                for c, _, cw in rows:
+                    c2[c] = c2.get(c, 0) + cw * cw
+            else:
+                # the checkpoint serves ||c||^2, the dot pivot and the update
+                cent = cent.localCheckpoint(eager=True)
+                c2 = {int(r["cluster"]): int(r["c2"]) for r in _sq_norms(cent).collect()}
+            assign = _assign_fixedpoint_pivot(w, d2, cent, c2)
         if p == n_assign_passes - 1:
             break
         if deep:
             assign = assign.localCheckpoint(eager=False)  # feeds sizes + update
-        csize = assign.groupBy("cluster").agg(F.count("*").alias("n"))
-        cent = (
-            w.join(assign.select("doc_id", "cluster"), "doc_id")
-            .groupBy("cluster", "word")
-            .agg(F.sum("w").alias("s"))
-            .join(F.broadcast(csize), "cluster")
-            .select(
-                "cluster",
-                "word",
-                # DIV truncates toward zero in BOTH engines (Spark DIV and
-                # DuckDB // agree on negatives — verified), so the rounded
-                # mean is engine-exact for signed features too
-                F.expr("(2 * s + n) DIV (2 * n)").cast("long").alias("cw"),
-            )
-            # drop exact zeros only — they contribute nothing to c2 or the
-            # dot join; negative weights (dense signed features, e.g.
-            # embeddings) must survive (!= 0, not > 0; identical on the
-            # nonnegative TF-IDF path)
-            .filter(F.col("cw") != 0)
-        )
-        collected = None  # the update chain invalidates the local rows
+        cent = _centroid_update(w, assign)
+        rows = None
         if deep:
             cent = cent.localCheckpoint(eager=False)  # cut per-iteration lineage
-    if output == "assignments":
-        # (doc_id, cluster, dist2) of the LAST pass — the input to
-        # cluster-scoped downstream work (SemDeDup-style within-cluster
-        # pair generation, cluster-balanced sampling). EAGERLY
-        # checkpointed: consumers typically self-join the assignments
-        # (pair generation), and a lazy checkpoint would run the whole
-        # Lloyd chain once per branch inside their first job
-        try:
-            out = assign.localCheckpoint(eager=True)
-        finally:
-            if persist_weights:
-                # the eager checkpoint was this cache's last consumer —
-                # release the blocks now instead of leaking them for the
-                # session (round-9 verdict); finally so an executor loss
-                # or OOM during the materializing job can't leak the
-                # cache either (round-10 verdict #3)
-                w.unpersist()
-        return out
-    if output == "assignments_lazy":
-        # same table, returned as the RAW lazy plan — for SINGLE-consumer
-        # chains (e.g. cluster labeling joins the assignments once): the
-        # consumer's first action runs the Lloyd chain inline exactly
-        # once, so a checkpoint handle here bought nothing and cost a
-        # full plan->RDD conversion (~0.7s of driver time at sf0.1,
-        # cProfile-verified — dropped in optimization round 12). The
-        # single-consumer contract is the caller's: a caller that fans
-        # the result into several actions should checkpoint it itself.
-        # persist_weights=True in THIS mode is the one session-lifetime
-        # cache left (the last consumer is unknowable here) — the
-        # docstring tells such callers to clearCache()/unpersist
-        # themselves.
+    if lazy:
         return assign
-    summary = (
-        assign.groupBy("cluster")
-        .agg(
-            F.count("*").cast("bigint").alias("n_members"),
-            F.sum("dist2").cast("bigint").alias("sse_e8"),
+    if output != "assignments":
+        assign = (
+            assign.groupBy("cluster")
+            .agg(
+                F.count("*").cast("bigint").alias("n_members"),
+                F.sum("dist2").cast("bigint").alias("sse_e8"),
+            )
+            .orderBy("cluster")
         )
-        .orderBy("cluster")
-    )
-    if persist_weights:
-        # k rows — materialize them eagerly so the weights cache can be
-        # released before returning: the one extra "job" is the same
-        # Lloyd chain the caller's first action was about to run, now
-        # feeding a k-row checkpoint instead of leaking a corpus-sized
-        # cache for the session (round-9 verdict); finally so a failing
-        # materialization can't leak the cache (round-10 verdict #3)
-        try:
-            summary = summary.localCheckpoint(eager=True)
-        finally:
-            w.unpersist()
-    return summary
+    # eager: assignment consumers typically self-join (pair generation),
+    # and a lazy checkpoint would run the Lloyd chain once per branch.
+    # The checkpoint is the weights cache's last consumer; finally, so a
+    # failing materialization cannot leak the cache either
+    try:
+        return assign.localCheckpoint(eager=True)
+    finally:
+        w.unpersist()
 
+
+# Past this many clusters kmeans_fixedpoint assigns with the join kernel:
+# the pivot kernel's row is one column per cluster.
+_PIVOT_MAX_K = 256
 
 _CENT_COLLECT_MAX = 65536  # centroid rows a driver collect may hold
 
 
+def _collect_small(df: DataFrame) -> list[tuple] | None:
+    """A (key, word, weight) table as local ``(int, word, int)`` tuples,
+    or None when it holds more than ``_CENT_COLLECT_MAX`` rows."""
+    got = df.limit(_CENT_COLLECT_MAX + 1).collect()
+    if len(got) > _CENT_COLLECT_MAX:
+        return None
+    return [(int(a), word, int(x)) for a, word, x in got]
+
+
+def _x2(w: DataFrame) -> DataFrame:
+    """(doc_id, x2): each document's exact squared norm."""
+    return w.groupBy("doc_id").agg(F.sum(F.col("w") * F.col("w")).alias("x2"))
+
+
+def _sq_norms(cent: DataFrame) -> DataFrame:
+    """(cluster, c2): each centroid's exact squared norm."""
+    return cent.groupBy("cluster").agg(F.sum(F.col("cw") * F.col("cw")).alias("c2"))
+
+
+def _seed_centroids(w: DataFrame, ids: DataFrame, k: int) -> DataFrame:
+    """(cluster, word, cw): the weight rows of the k documents of ``ids``
+    first in the md5 seed order, cluster = their rank."""
+    seed_rows = _md5_first(ids, k).collect()
+    seed_df = local_df(
+        w.sparkSession,
+        [(r["doc_id"], i) for i, r in enumerate(seed_rows)],
+        "doc_id long, cluster int",
+    )
+    return w.join(F.broadcast(seed_df), "doc_id").select(
+        "cluster", "word", F.col("w").alias("cw")
+    )
+
+
+def _nearest(dist: DataFrame) -> DataFrame:
+    """(doc_id, cluster, dist2): each document's least (dist2, cluster)
+    row of ``dist`` — the O32 argmin, lowest cluster on ties."""
+    best = dist.groupBy("doc_id").agg(
+        F.min_by(F.struct("cluster", "dist2"), F.struct("dist2", "cluster")).alias("b")
+    )
+    return best.select(
+        "doc_id", F.col("b.cluster").alias("cluster"), F.col("b.dist2").alias("dist2")
+    )
+
+
 def _assign_fixedpoint_pivot(
-    w: DataFrame, d2: DataFrame, cent: DataFrame, c2: dict[int, int] | None = None
+    w: DataFrame, d2: DataFrame, cent: DataFrame, c2: dict[int, int]
 ) -> DataFrame:
     """Pivot-form of the fixed-point assignment: ONE groupBy(doc_id)
     pivot produces every per-cluster dot as a column, then the argmin is
-    a pure row expression over literal ‖c‖² values — replacing the
-    (doc_id, cluster)-keyed shuffle + (doc_id, cluster) join + argmin
-    groupBy of the join form with a single doc-keyed shuffle.
+    a pure row expression over the literal ‖c‖² values ``c2`` —
+    replacing the (doc_id, cluster)-keyed shuffle + (doc_id, cluster)
+    join + argmin groupBy of the join form with a single doc-keyed
+    shuffle.
 
-    The k-row ‖c‖² collect is bounded (k longs) and the only driver
-    materialization beyond the seed pick; candidate clusters are exactly
-    the clusters present in ``cent`` (an empty cluster is NOT a
-    candidate — same contract as the join form's c2 cross join). Integer
-    arithmetic is identical to the join form, so results are bit-equal
-    (pinned by test). Right for k up to a few thousand (pivot width = k
-    columns); the join form remains the huge-k path.
-
-    ``c2`` lets the caller hand in the per-cluster ||c||^2 ints it
-    already derived from a collected centroid table (the small-cent
-    fast path in :func:`kmeans_fixedpoint`) — skipping this kernel's
-    own collect job; values must equal the aggregate exactly (exact
-    Python int arithmetic over the same rows guarantees it)."""
-    if c2 is None:
-        c2_rows = (
-            cent.groupBy("cluster")
-            .agg(F.sum(F.col("cw") * F.col("cw")).alias("c2"))
-            .collect()
-        )
-        c2 = {int(r["cluster"]): int(r["c2"]) for r in c2_rows}
+    Candidate clusters are exactly the keys of ``c2``, the clusters
+    present in ``cent`` (an empty cluster is NOT a candidate — same
+    contract as the join form's c2 cross join). Integer arithmetic is
+    identical to the join form, so results are bit-equal (pinned by
+    test). Right for k up to a few thousand (pivot width = k columns)."""
     clusters = sorted(c2)
     dots = (
         w.join(F.broadcast(cent), "word")
@@ -577,14 +527,13 @@ def _assign_fixedpoint(w: DataFrame, d2: DataFrame, cent: DataFrame) -> DataFram
     Same sparse expansion as ``_assign`` (dot via word join, missing
     pairs via the k-row cross join) but everything stays int64; dist2 is
     exactly Σ_union (w−c)², hence never negative — no clamp."""
-    c2 = cent.groupBy("cluster").agg(F.sum(F.col("cw") * F.col("cw")).alias("c2"))
     dots = (
         w.join(F.broadcast(cent), "word")
         .groupBy("doc_id", "cluster")
         .agg(F.sum(F.col("w") * F.col("cw")).alias("dot"))
     )
     dist = (
-        d2.crossJoin(F.broadcast(c2))
+        d2.crossJoin(F.broadcast(_sq_norms(cent)))
         .join(dots, ["doc_id", "cluster"], "left")
         .select(
             "doc_id",
@@ -594,12 +543,7 @@ def _assign_fixedpoint(w: DataFrame, d2: DataFrame, cent: DataFrame) -> DataFram
             ).alias("dist2"),
         )
     )
-    best = dist.groupBy("doc_id").agg(
-        F.min_by(F.struct("cluster", "dist2"), F.struct("dist2", "cluster")).alias("b")
-    )
-    return best.select(
-        "doc_id", F.col("b.cluster").alias("cluster"), F.col("b.dist2").alias("dist2")
-    )
+    return _nearest(dist)
 
 
 def _probe_lists(w: DataFrame, d2: DataFrame, g: DataFrame, n_probe: int) -> DataFrame:
@@ -636,17 +580,48 @@ def _probe_lists(w: DataFrame, d2: DataFrame, g: DataFrame, n_probe: int) -> Dat
 _FUSED_MAX_CELLS = 4_000_000
 
 
+def _rows_matrix(rows: list, key: str, val: str, width: int = 0, dtype=np.int64):
+    """(ids, M): long-form ``(key, word, val)`` rows as a dense matrix,
+    one row per distinct key in ascending order, at least ``width``
+    columns and as many as the largest word needs."""
+    ids = sorted({int(r[key]) for r in rows})
+    width = max(width, max(int(r["word"]) for r in rows) + 1)
+    idx = {j: i for i, j in enumerate(ids)}
+    M = np.zeros((len(ids), width), dtype=dtype)
+    for r in rows:
+        M[idx[int(r[key])], int(r["word"])] = r[val]
+    return ids, M
+
+
+def _e4_batch(pdf, vec_col: str):
+    """A pandas batch's dense vectors quantized to e4 as float64 ints —
+    ``_round_half_away(x·1e4)``, the same double path as ``e_int``."""
+    return _round_half_away(
+        np.vstack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64))) * 10000.0
+    )
+
+
+def _rank_lists(X, G, g2, take: int):
+    """(order, Xw): per row of the e4 batch ``X``, the row positions of
+    its ``take`` nearest coarse lists in ``G`` by key g2 − 2·dot (the
+    x2 term is constant per doc), and ``X`` fitted to G's width. Stable
+    argsort over m-ascending rows is the (key, m) tie-break; every
+    product is an integer below 2^53, exact in float64."""
+    width = G.shape[1]
+    if X.shape[1] >= width:
+        Xw = X[:, :width]  # zero-dropped columns beyond width add no dot
+    else:
+        Xw = np.pad(X, ((0, 0), (0, width - X.shape[1])))
+    return np.argsort(g2 - 2.0 * (Xw @ G.T), axis=1, kind="stable")[:, :take], Xw
+
+
 def _probe_lists_numpy(
     dense: DataFrame, g_rows: list, n_probe: int, vec_col: str = "vec"
 ) -> DataFrame:
     """Arrow/numpy twin of :func:`_probe_lists` over the DENSE vector
-    form: per batch, quantize to e4 (``_round_half_away(x·1e4)`` — the
-    same double path as ``e_int``), one matmul against the coarse
-    codebook, rank by key = g2 − 2·dot with a stable argsort (ties →
-    the lower list id, G rows ordered by m ascending). The x2 term of
-    the join form's key is constant per doc, so the ranking is
-    IDENTICAL (pinned by test); every product is an integer below 2^53,
-    exact in float64.
+    form: per batch, quantize to e4 (:func:`_e4_batch`) and rank the
+    coarse lists with one matmul (:func:`_rank_lists`). The ranking is
+    IDENTICAL to the join form's (pinned by test).
 
     Why this exists: the join form expands n·d·c rows per pass through
     a hash aggregate — the dominant stage of the hierarchical
@@ -654,35 +629,18 @@ def _probe_lists_numpy(
     (batch × d) @ (d × c) matmul. The codebook rides in the closure:
     c×d e4 ints with c ~ sqrt(2k) — ~17 MB even at k = 2×10⁷, so the
     closure stays broadcast-safe at any realistic corpus."""
-    import numpy as np
-
-    from pyspark.sql import types as T
-
-    from .similarity import _round_half_away
-
-    ms = sorted({int(r["m"]) for r in g_rows})
-    width = max(int(r["word"]) for r in g_rows) + 1
-    G = np.zeros((len(ms), width), dtype=np.float64)
-    midx = {m: i for i, m in enumerate(ms)}
-    for r in g_rows:
-        G[midx[int(r["m"])], int(r["word"])] = float(r["gw"])
+    ms, G = _rows_matrix(g_rows, "m", "gw", dtype=np.float64)
     g2 = (G * G).sum(axis=1)  # exact: e4² ints < 2^53
     ms_arr = np.array(ms, dtype=np.int32)
     take = min(n_probe, len(ms))
 
     def probe(batches):
+        import pandas as pd
+
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = _round_half_away(
-                np.vstack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)))
-                * 10000.0
-            )
-            keys = g2 - 2.0 * (X[:, :width] @ G.T)  # zero-dropped cols beyond width
-            # stable argsort == (key, m) tie-break (columns are m-ascending)
-            order = np.argsort(keys, axis=1, kind="stable")[:, :take]
-            import pandas as pd
-
+            order, _ = _rank_lists(_e4_batch(pdf, vec_col), G, g2, take)
             yield pd.DataFrame(
                 {
                     "doc_id": np.repeat(pdf["doc_id"].to_numpy(), take),
@@ -700,95 +658,61 @@ def _np_trunc_div(a, b):
     """Integer division truncating toward ZERO — numpy's ``//`` floors
     (differs on negatives), while Spark's DIV and DuckDB's ``//`` both
     truncate; signed centroid sums make the distinction load-bearing."""
-    import numpy as np
-
     return np.sign(a) * np.sign(b) * (np.abs(a) // np.abs(b))
+
+
+def _nearest_numpy(X, G, cand: list):
+    """Per row of the int64 matrix ``X``, its nearest row of ``G`` among
+    the ascending row ids ``cand`` under x2 + g2 − 2·dot; the first
+    minimum wins, so ties go to the lowest id."""
+    Gc = G[cand]
+    keys = (
+        (X * X).sum(axis=1)[:, None]
+        + (Gc * Gc).sum(axis=1)[None, :]
+        - 2 * (X[:, : G.shape[1]] @ Gc.T)
+    )
+    return np.asarray(cand)[np.argmin(keys, axis=1)]
 
 
 def _coarse_model_numpy(f0_rows: list, n_list: int):
     """Driver-side exact-int replica of the coarse-quantizer chain over
     the COLLECTED fine seed vectors (k×d rows — the same payload the
     fused kernel already holds in its closure, so no new scale bound):
-    md5-min coarse seeds → one assignment pass → (2s+n) trunc-div
-    update → final quantization of the seeds. Returns
-    (g_rows, cmap1_rows) shaped like the distributed path's collects —
+    md5-first coarse seeds → one assignment pass → (2s+n) trunc-div
+    update. Returns (g_rows, G, nonempty): the coarse codebook as
+    (m, word, gw) rows and as an int64 matrix indexed by list id, and
+    the lists with a nonzero weight — the only candidates, exactly as
+    the SQL's ``WHERE gw <> 0`` keeps zero rows out of the codebook.
     BIT-IDENTICAL to the join-form/SQL chain (pinned by the kernel
-    parity + degenerate==exact tests): int64 matmuls (products < 2^63),
-    (key, id) tie-breaks via first-hit argmin over id-ascending
-    columns, zero-dropped rows excluded from candidacy exactly as the
-    SQL's ``WHERE gw <> 0`` does. Exists purely to delete ~6 tiny
-    Spark jobs per clustering (the measured fixed floor at small SF —
-    the coarse chain is k-row work that never needed a cluster)."""
-    import hashlib
-
-    import numpy as np
-
-    js = sorted({int(r["cluster"]) for r in f0_rows})
-    width = max(int(r["word"]) for r in f0_rows) + 1
-    jidx = {j: i for i, j in enumerate(js)}
-    S = np.zeros((len(js), width), dtype=np.int64)
-    for r in f0_rows:
-        S[jidx[int(r["cluster"])], int(r["word"])] = int(r["cw"])
-    x2 = (S * S).sum(axis=1)
-    cseeds = sorted(js, key=lambda j: (hashlib.md5(str(j).encode()).hexdigest(), j))[
-        : min(n_list, len(js))
-    ]
-    G0 = S[[jidx[j] for j in cseeds]]
-    # candidacy mirrors the join form: a list is a candidate only if its
-    # centroid has >= 1 nonzero weight (zero rows never reach cent/g)
-    cand0 = [m for m in range(len(cseeds)) if G0[m].any()]
-    g02 = (G0 * G0).sum(axis=1)
-    keys0 = x2[:, None] + g02[None, cand0] - 2 * (S @ G0[cand0].T)
-    ca1 = np.array(cand0)[np.argmin(keys0, axis=1)]  # first hit = lowest m
-    G = np.zeros((len(cseeds), width), dtype=np.int64)
-    nonempty = []
-    for m in set(int(v) for v in ca1):
+    parity + degenerate==exact tests): int64 matmuls (products < 2^63)
+    and (key, id) tie-breaks. Exists purely to delete ~6 tiny Spark jobs
+    per clustering (the measured fixed floor at small SF — the coarse
+    chain is k-row work that never needed a cluster)."""
+    js, S = _rows_matrix(f0_rows, "cluster", "cw")
+    cseeds = [js.index(j) for j in sorted(js, key=_md5_key)[:n_list]]
+    G0 = S[cseeds]
+    ca1 = _nearest_numpy(S, G0, [m for m in range(len(cseeds)) if G0[m].any()])
+    G = np.zeros((len(cseeds), S.shape[1]), dtype=np.int64)
+    for m in np.unique(ca1):
         members = S[ca1 == m]
         n = members.shape[0]
-        s = members.sum(axis=0)
-        gw = _np_trunc_div(2 * s + n, np.int64(2 * n))
-        G[m] = gw
-        if gw.any():
-            nonempty.append(m)
-    nonempty = sorted(nonempty)
-    g2 = (G * G).sum(axis=1)
-    keys1 = x2[:, None] + g2[None, nonempty] - 2 * (S @ G[nonempty].T)
-    cmap1 = np.array(nonempty)[np.argmin(keys1, axis=1)]
+        G[m] = _np_trunc_div(2 * members.sum(axis=0) + n, np.int64(2 * n))
+    nonempty = [m for m in range(len(cseeds)) if G[m].any()]
     g_rows = [
         {"m": m, "word": w, "gw": int(G[m, w])}
         for m in nonempty
         for w in np.nonzero(G[m])[0]
     ]
-    cmap1_rows = [{"cluster": int(j), "m": int(m)} for j, m in zip(js, cmap1)]
-    return g_rows, cmap1_rows, G, g2, nonempty
+    return g_rows, G, nonempty
 
 
-def _quantize_rows_numpy(cent_rows: list, G, g2, nonempty: list) -> list:
-    """Driver-side pass-2 re-quantization: assign each (collected) fine
-    centroid to its nearest nonempty coarse list under the same int64
-    key and tie-break — the cmap2 stage without a Spark job."""
-    import numpy as np
-
-    js = sorted({int(r["cluster"]) for r in cent_rows})
-    width = G.shape[1]
-    jidx = {j: i for i, j in enumerate(js)}
-    C = np.zeros((len(js), width), dtype=np.int64)
-    extra = 0
-    for r in cent_rows:
-        w = int(r["word"])
-        if w < width:
-            C[jidx[int(r["cluster"])], w] = int(r["cw"])
-        else:
-            extra += 1  # word beyond G's width: dot term is 0 anyway
-    x2 = (C * C).sum(axis=1)
-    if extra:
-        # x2 must still count out-of-width coords (they square into x2
-        # even though they never meet a nonzero G column)
-        for r in cent_rows:
-            if int(r["word"]) >= width:
-                x2[jidx[int(r["cluster"])]] += int(r["cw"]) ** 2
-    keys = x2[:, None] + g2[None, nonempty] - 2 * (C @ G[nonempty].T)
-    ms = np.array(nonempty)[np.argmin(keys, axis=1)]
+def _quantize_rows_numpy(cent_rows: list, G, nonempty: list) -> list:
+    """Driver-side quantization of (collected) fine centroids: each one's
+    nearest nonempty coarse list under the same int64 key and tie-break
+    as the distributed :func:`_quantize` — the cmap stage without a
+    Spark job. Words beyond G's width still count in x2."""
+    js, C = _rows_matrix(cent_rows, "cluster", "cw", G.shape[1])
+    ms = _nearest_numpy(C, G, nonempty)
     return [{"cluster": int(j), "m": int(m)} for j, m in zip(js, ms)]
 
 
@@ -801,57 +725,41 @@ def _assign_fused_numpy(
     vec_col: str = "vec",
 ) -> DataFrame:
     """One-pass Arrow/numpy form of probe-then-score: per batch, ONE
-    matmul ranks the coarse lists (stable argsort = (key, m) tie-break),
-    then for each probed list one matmul scores ONLY its fine centroids
-    and the per-doc argmin runs over the probed lists' bests — emitting
+    matmul ranks the coarse lists (:func:`_rank_lists`), then for each
+    probed list one matmul scores ONLY its fine centroids and the
+    per-doc argmin runs over the probed lists' bests — emitting
     (doc_id, cluster, dist2) directly. Zero shuffles for a whole
     assignment pass (the join form pays a word-join hash aggregate plus
     a window per pass); both codebooks ride the closure. Bit-identical
     to the join form (pinned by test): e4 quantization via
-    ``_round_half_away(x·1e4)`` = ``e_int``; every key is
-    x2 + c2 − 2·dot over ints < 2^53, exact in float64; per-list argmin
-    takes the FIRST minimum over j-ascending rows and the cross-list
-    reduce breaks ties by (dist2, j) — together the global (dist2, j)
-    rule.
+    :func:`_e4_batch` = ``e_int``; every key is x2 + c2 − 2·dot over
+    ints < 2^53, exact in float64; per-list argmin takes the FIRST
+    minimum over j-ascending rows and the cross-list reduce breaks ties
+    by (dist2, j) — together the global (dist2, j) rule. ``cmap_rows``
+    maps every cluster of ``cent_rows`` to its coarse list.
 
     Closure scale bound: the fine codebook is k×d values — fine for
     k = n/target at the measured SFs (400×64 at sf1.0) and far beyond,
     but k grows with the corpus, so :func:`kmeans_fixedpoint_ivf` only
     picks this kernel under ``_FUSED_MAX_CELLS`` and falls back to the
     distributed join scoring above it."""
-    import numpy as np
-
-    from pyspark.sql import types as T
-
-    from .similarity import _round_half_away
-
-    ms = sorted({int(r["m"]) for r in g_rows})
-    width = max(
-        max(int(r["word"]) for r in g_rows),
-        max(int(r["word"]) for r in cent_rows),
-    ) + 1
-    G = np.zeros((len(ms), width), dtype=np.float64)
-    midx = {m: i for i, m in enumerate(ms)}
-    for r in g_rows:
-        G[midx[int(r["m"])], int(r["word"])] = float(r["gw"])
-    g2 = (G * G).sum(axis=1)
-    # fine centroids grouped by their coarse list, j-ascending inside
-    by_list_js: dict[int, list[int]] = {}
+    ms, G = _rows_matrix(
+        g_rows, "m", "gw", max(int(r["word"]) for r in cent_rows) + 1, np.float64
+    )
+    js, C = _rows_matrix(cent_rows, "cluster", "cw", G.shape[1], np.float64)
     j2m = {int(r["cluster"]): int(r["m"]) for r in cmap_rows}
-    cent: dict[int, dict[int, float]] = {}
-    for r in cent_rows:
-        cent.setdefault(int(r["cluster"]), {})[int(r["word"])] = float(r["cw"])
-    for j in sorted(j2m):
-        by_list_js.setdefault(j2m[j], []).append(j)
-    F_by_list: dict[int, tuple] = {}
-    for m, js in by_list_js.items():
-        Fm = np.zeros((len(js), width), dtype=np.float64)
-        for i, j in enumerate(js):
-            for word, cw in cent.get(j, {}).items():
-                Fm[i, word] = cw
-        F_by_list[m] = (np.array(js, dtype=np.int32), Fm, (Fm * Fm).sum(axis=1))
+    # fine centroids grouped by their coarse list, j-ascending inside
+    by_list: dict[int, list[int]] = {}
+    for i, j in enumerate(js):
+        by_list.setdefault(j2m[j], []).append(i)
+    F_by_list = {
+        m: (np.array([js[i] for i in idx], dtype=np.int32), C[idx], (C[idx] * C[idx]).sum(axis=1))
+        for m, idx in by_list.items()
+    }
     probe_ms = np.array(sorted(F_by_list), dtype=np.int32)  # nonempty lists only
-    sel = np.array([midx[m] for m in probe_ms])
+    sel = [ms.index(m) for m in probe_ms]
+    Gp = G[sel]
+    g2p = (Gp * Gp).sum(axis=1)
     take = min(n_probe, len(probe_ms))
 
     def assign(batches):
@@ -860,26 +768,19 @@ def _assign_fused_numpy(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = _round_half_away(
-                np.vstack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)))
-                * 10000.0
-            )
-            Xw = X[:, :width] if X.shape[1] >= width else np.pad(
-                X, ((0, 0), (0, width - X.shape[1]))
-            )
+            X = _e4_batch(pdf, vec_col)
             x2 = (X * X).sum(axis=1)
-            keys = g2[sel] - 2.0 * (Xw @ G[sel].T)
-            order = np.argsort(keys, axis=1, kind="stable")[:, :take]
+            order, Xw = _rank_lists(X, Gp, g2p, take)
             probed = probe_ms[order]  # (n_b, take)
             best_d = np.full(len(pdf), np.inf)
             best_j = np.full(len(pdf), np.iinfo(np.int32).max, dtype=np.int64)
             for m in np.unique(probed):
                 rows = np.nonzero((probed == m).any(axis=1))[0]
-                js, Fm, c2 = F_by_list[int(m)]
+                js_m, Fm, c2 = F_by_list[int(m)]
                 d = x2[rows, None] + c2[None, :] - 2.0 * (Xw[rows] @ Fm.T)
                 loc = np.argmin(d, axis=1)  # first min = lowest j (j-ascending)
                 dmin = d[np.arange(len(rows)), loc]
-                jmin = js[loc].astype(np.int64)
+                jmin = js_m[loc].astype(np.int64)
                 upd = (dmin < best_d[rows]) | (
                     (dmin == best_d[rows]) & (jmin < best_j[rows])
                 )
@@ -915,7 +816,6 @@ def _assign_via_probes(
     candidate even when its centroid shares no nonzero word with the
     doc)."""
     cand = probes.join(F.broadcast(cmap), "m").select("doc_id", "cluster")
-    c2 = cent.groupBy("cluster").agg(F.sum(F.col("cw") * F.col("cw")).alias("c2"))
     dots = (
         cand.join(w, "doc_id")
         .join(F.broadcast(cent), ["cluster", "word"])
@@ -924,7 +824,7 @@ def _assign_via_probes(
     )
     dist = (
         cand.join(d2, "doc_id")
-        .join(F.broadcast(c2), "cluster", "left")
+        .join(F.broadcast(_sq_norms(cent)), "cluster", "left")
         .join(dots, ["doc_id", "cluster"], "left")
         .select(
             "doc_id",
@@ -936,19 +836,31 @@ def _assign_via_probes(
             ).alias("dist2"),
         )
     )
-    best = dist.groupBy("doc_id").agg(
-        F.min_by(F.struct("cluster", "dist2"), F.struct("dist2", "cluster")).alias("b")
-    )
-    return best.select(
-        "doc_id", F.col("b.cluster").alias("cluster"), F.col("b.dist2").alias("dist2")
-    )
+    return _nearest(dist)
+
+
+def _assign_numpy_probes(
+    w: DataFrame,
+    dense: DataFrame,
+    g_rows: list,
+    cent: DataFrame,
+    cmap: DataFrame,
+    n_probe: int,
+) -> DataFrame:
+    """(doc_id, cluster, dist2): numpy coarse probes
+    (:func:`_probe_lists_numpy`) + distributed join scoring
+    (:func:`_assign_via_probes`). Only lists that HOLD at least one fine
+    centroid are ranked: a doc probing only fine-empty lists would get
+    zero candidates and silently vanish from the assignment."""
+    lists = {r["m"] for r in cmap.select("m").distinct().collect()}  # <= c rows
+    probes = _probe_lists_numpy(dense, [r for r in g_rows if r["m"] in lists], n_probe)
+    return _assign_via_probes(w, _x2(w), cent, probes, cmap)
 
 
 def _centroid_update(w: DataFrame, assign: DataFrame) -> DataFrame:
     """Per-(cluster, word) rounded-int mean over the assignment — the
-    O33 HALF_UP rule ``(2s + n) div (2n)``, exact zeros dropped. The one
-    linear stage of a Lloyd pass (identical to the loop body of
-    :func:`kmeans_fixedpoint`)."""
+    O33 HALF_UP rule ``(2s + n) div (2n)`` — the one linear stage of
+    every fixed-point Lloyd pass."""
     csize = assign.groupBy("cluster").agg(F.count("*").alias("n"))
     return (
         w.join(assign.select("doc_id", "cluster"), "doc_id")
@@ -958,9 +870,27 @@ def _centroid_update(w: DataFrame, assign: DataFrame) -> DataFrame:
         .select(
             "cluster",
             "word",
+            # DIV truncates toward zero in BOTH engines (Spark DIV and
+            # DuckDB // agree on negatives — verified), so the rounded
+            # mean is engine-exact for signed features too
             F.expr("(2 * s + n) DIV (2 * n)").cast("long").alias("cw"),
         )
+        # drop exact zeros only — they contribute nothing to c2 or the
+        # dot join; negative weights (dense signed features, e.g.
+        # embeddings) must survive (!= 0, not > 0)
         .filter(F.col("cw") != 0)
+    )
+
+
+def _quantize(cent: DataFrame, g: DataFrame) -> DataFrame:
+    """(cluster, m): each fine centroid's nearest coarse list — the
+    centroids re-keyed as documents (long ids, like every weights table
+    of the family) through :func:`_assign_fixedpoint`."""
+    cw = cent.select(
+        F.col("cluster").cast("long").alias("doc_id"), "word", F.col("cw").alias("w")
+    )
+    return _assign_fixedpoint(cw, _x2(cw), g).select(
+        F.col("doc_id").cast("int").alias("cluster"), F.col("cluster").alias("m")
     )
 
 
@@ -972,16 +902,15 @@ def _fused_chain(
     final fine centroids (c1), and the fine→coarse map (cmap2) — so a
     LATER batch can be quantized through the same model without
     re-clustering (the incremental-dedup shape). Assignments are
-    eagerly checkpointed."""
-    g_rows, cmap1_rows, G, g2v, nonempty = _coarse_model_numpy(f0_rows, n_list)
+    lazily checkpointed."""
+    g_rows, G, nonempty = _coarse_model_numpy(f0_rows, n_list)
+    cmap1_rows = _quantize_rows_numpy(f0_rows, G, nonempty)
     # a1 has exactly ONE consumer — the centroid-update collect right
-    # below — so its former eager checkpoint was a dedicated
-    # materialization job plus a plan->RDD conversion for nothing
-    # (optimization round 12); pass 2 reads only the COLLECTED c1 rows,
-    # never a1 itself
+    # below — so it is not checkpointed; pass 2 reads only the COLLECTED
+    # c1 rows, never a1 itself
     a1 = _assign_fused_numpy(dense, g_rows, f0_rows, cmap1_rows, n_probe)
     c1_rows = _centroid_update(w, a1).collect()
-    cmap2_rows = _quantize_rows_numpy(c1_rows, G, g2v, nonempty)
+    cmap2_rows = _quantize_rows_numpy(c1_rows, G, nonempty)
     a2 = _assign_fused_numpy(dense, g_rows, c1_rows, cmap2_rows, n_probe)
     model = {
         "kind": "fused",
@@ -991,9 +920,8 @@ def _fused_chain(
         "n_probe": n_probe,
     }
     # lazy: consumers self-join the assignments, but the caller's first
-    # action materializes the checkpoint once for both branches — the
-    # dedicated eager job was pure overhead (round 12, same reasoning
-    # as the round-11 connected-components change)
+    # action materializes the checkpoint once for both branches — a
+    # dedicated eager job would be pure overhead
     return a2.localCheckpoint(eager=False), model
 
 
@@ -1006,7 +934,6 @@ def kmeans_fixedpoint_ivf_model(
     word_col: str = "word",
     weight_col: str = "w_e4",
     dense: DataFrame | None = None,
-    max_fused_cells: int | None = None,
 ) -> tuple[DataFrame, dict]:
     """:func:`kmeans_fixedpoint_ivf` with the trained model EXPOSED:
     returns (assignments, model) where the model quantizes later
@@ -1014,9 +941,9 @@ def kmeans_fixedpoint_ivf_model(
     incremental-dedup shape (train on the corpus once, route every
     arriving batch through the same lists). Requires the dense form.
 
-    The model has TWO tiers, auto-picked by the same closure bound the
-    batch path uses (``max_fused_cells``, default ``_FUSED_MAX_CELLS``)
-    and pinned bit-identical across the boundary by test:
+    The model has TWO tiers, picked by the closure bound the batch path
+    uses (``_FUSED_MAX_CELLS`` fine-codebook cells) and pinned
+    bit-identical across the boundary by test:
 
     - **fused** (k×dim within the bound): both codebooks ride the
       model dict as collected rows; a batch assignment is ONE
@@ -1028,17 +955,27 @@ def kmeans_fixedpoint_ivf_model(
       plus the c×d coarse codebook rows (c ~ sqrt(2k) — bounded at any
       scale); :func:`assign_with_model` routes batches through the
       numpy coarse probes + the distributed join-scoring tier, exactly
-      the batch path's own fallback ladder. Batch-only: the join
-      scorer aggregates over a self-derived long form, which a
-      micro-batch stream cannot express without watermarked
-      stream-stream joins."""
+      the batch path's own fallback. Batch-only: the join scorer
+      aggregates over a self-derived long form, which a micro-batch
+      stream cannot express without watermarked stream-stream joins."""
     if dense is None:
         raise ValueError("kmeans_fixedpoint_ivf_model requires the dense form")
     return kmeans_fixedpoint_ivf(
         weights, k, n_list=n_list, n_probe=n_probe, id_col=id_col,
-        word_col=word_col, weight_col=weight_col, dense=dense,
-        _want_model=True, _max_fused_cells=max_fused_cells,
+        word_col=word_col, weight_col=weight_col, dense=dense, _want_model=True,
     )
+
+
+def dense_e4_long_form(df: DataFrame, id_col: str = "doc_id", vec_col: str = "vec") -> DataFrame:
+    """(doc_id, word, x_e4): dense vectors as the fixed-point family's
+    long-form input — word = vector position, x_e4 = ``e_int(x, 4)``,
+    the quantization the numpy kernels' :func:`_e4_batch` reproduces
+    (pinned by the parity tests)."""
+    from ..functions.numeric import e_int
+
+    return df.select(
+        F.col(id_col).alias("doc_id"), F.posexplode(vec_col).alias("word", "x")
+    ).select("doc_id", "word", e_int(F.col("x").cast("double"), 4).alias("x_e4"))
 
 
 def assign_with_model(dense: DataFrame, model: dict) -> DataFrame:
@@ -1054,27 +991,11 @@ def assign_with_model(dense: DataFrame, model: dict) -> DataFrame:
     the corpus, route every arriving batch through the same lists,
     compare only within assigned clusters."""
     if model.get("kind") == "distributed":
-        from ..functions.numeric import e_int
-
-        cmap, cent = model["cmap_df"], model["cent_df"]
-        # probe only lists that HOLD >= 1 fine centroid — the same
-        # restriction the batch path's _pass applies (<= c rows)
-        lists = {r["m"] for r in cmap.select("m").distinct().collect()}
-        probes = _probe_lists_numpy(
-            dense, [r for r in model["g_rows"] if r["m"] in lists],
+        w_b = dense_e4_long_form(dense).withColumnRenamed("x_e4", "w")
+        return _assign_numpy_probes(
+            w_b, dense, model["g_rows"], model["cent_df"], model["cmap_df"],
             model["n_probe"],
         )
-        # e4 long form of the batch — e_int == the fused kernel's
-        # _round_half_away(x·1e4) quantization (pinned by parity tests)
-        w_b = dense.select(
-            F.col("doc_id"), F.posexplode(F.col("vec")).alias("word", "x")
-        ).select(
-            "doc_id", "word", e_int(F.col("x").cast("double"), 4).alias("w")
-        )
-        d2_b = w_b.groupBy("doc_id").agg(
-            F.sum(F.col("w") * F.col("w")).alias("x2")
-        )
-        return _assign_via_probes(w_b, d2_b, cent, probes, cmap)
     return _assign_fused_numpy(
         dense, model["g_rows"], model["cent_rows"], model["cmap_rows"],
         model["n_probe"],
@@ -1091,7 +1012,6 @@ def kmeans_fixedpoint_ivf(
     weight_col: str = "w_e4",
     dense: DataFrame | None = None,
     _want_model: bool = False,
-    _max_fused_cells: int | None = None,
 ) -> DataFrame:
     """Hierarchically-assigned fixed-point K-Means (two assignment
     passes): the scale-safe form of :func:`kmeans_fixedpoint` for k that
@@ -1101,11 +1021,11 @@ def kmeans_fixedpoint_ivf(
     4.9/18.8/50.3s over 10× data). Here each pass assigns through an IVF
     coarse quantizer instead:
 
-    1. fine seeds: the k md5-min docs (same rule as the exact path);
-    2. coarse codebook G: the SAME 2-pass fixed-point Lloyd run over
-       just those k seed VECTORS, into ``n_list`` (default
-       ceil(sqrt(2k)), the term-balancing choice) coarse lists — k-row
-       work, distributed, never driver-side;
+    1. fine seeds: the k md5-first docs (same rule as the exact path);
+    2. coarse codebook G: one fixed-point Lloyd pass over just those k
+       seed VECTORS (re-keyed as documents), from the ``n_list``
+       (default ceil(sqrt(2k)), the term-balancing choice) md5-first
+       seed vectors — k-row work;
     3. per pass: every fine centroid is quantized to its nearest coarse
        list (k·c work), every doc probes its ``n_probe`` nearest lists
        (n·c work) and takes the exact fixed-point argmin over ONLY the
@@ -1120,160 +1040,93 @@ def kmeans_fixedpoint_ivf(
     differ from exact Lloyd (a doc whose true nearest fine centroid
     lives outside its probed lists lands in the best PROBED cluster) —
     the standard IVF tradeoff; with n_probe >= n_list it degenerates to
-    the exact assignment. Centroid tables (k×d rows) are broadcast here;
-    at corpus scales where k×d itself outgrows a broadcast, the
-    candidate join is still a plain equi-join on (cluster, word) —
-    Catalyst falls back to a shuffle join, or store centroids
-    partitioned by list id.
+    the exact assignment.
 
-    ``dense``: optionally the SAME vectors in dense array form
-    (columns ``doc_id``, ``vec`` — raw doubles, pre-quantization). When
-    given, the probe stage runs as the Arrow/numpy matmul kernel
-    (:func:`_probe_lists_numpy`) instead of the n·d·c word join — the
-    measured hot stage (10.6s of 26s at sf1.0) — with the ranking
-    pinned bit-identical to the join form. The fine-candidate scoring
-    stays a distributed join either way (its tables are k×d — too big
-    to ride a closure once k grows with the corpus).
+    Kernel tiers, all bit-identical (pinned by test):
 
-    Returns (doc_id, cluster, dist2) of the SECOND pass, eagerly
-    checkpointed (consumers self-join it)."""
+    - ``dense`` (columns ``doc_id``, ``vec`` — the SAME vectors as raw
+      doubles, pre-quantization) given and the k×d fine codebook within
+      ``_FUSED_MAX_CELLS``: the coarse chain runs driver-side in exact
+      int64 numpy (:func:`_coarse_model_numpy`) and each assignment pass
+      is ONE shuffle-free mapInPandas (:func:`_assign_fused_numpy`);
+    - ``dense`` given past the bound: numpy coarse probes (the c×d
+      codebook is bounded at any scale) + distributed join scoring of
+      the fine candidates (:func:`_assign_numpy_probes`) — the k×d fine
+      tables are broadcast, or shuffle-joined once they outgrow a
+      broadcast;
+    - no ``dense``: the all-join form (:func:`_probe_lists`), the
+      reference the numpy kernels are tested against.
+
+    Returns (doc_id, cluster, dist2) of the SECOND pass, checkpointed
+    (consumers self-join it)."""
     import math
 
     if n_list is None:
         n_list = max(2, math.ceil(math.sqrt(2 * k)))
-    # lazy: the first driver action over w (the fused path's seed-vector
-    # collect, or the exact path's seed pick when dense is absent)
-    # materializes the checkpoint — the former eager form paid a
-    # dedicated job up front (optimization round 12)
+    # lazy: the first driver action over w (the seed pick) materializes
+    # the checkpoint, with no dedicated job up front
     w = weights.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(word_col).alias("word"),
         F.col(weight_col).cast("long").alias("w"),
     ).localCheckpoint(eager=False)
-    d2 = w.groupBy("doc_id").agg(F.sum(F.col("w") * F.col("w")).alias("x2"))
+    d2 = _x2(w)
 
     # seed pick: dense ids are unique by contract, so the n·d-row
     # distinct over the exploded form is skipped when dense is given —
     # the md5 ordering (and thus the picked set) is identical
-    ids = (
-        dense.select("doc_id")
-        if dense is not None
-        else w.select("doc_id").distinct()
-    )
-    seed_rows = (
-        ids.orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id").limit(k).collect()
-    )
-    spark = weights.sparkSession
-    seed_df = local_df(
-        spark, [(r["doc_id"], i) for i, r in enumerate(seed_rows)], "doc_id long, cluster int"
-    )
-    # Fused fast path (decided from the dense dim BEFORE building the
-    # distributed coarse chain): when the k×d fine codebook fits the
-    # closure bound it is COLLECTED anyway, so the whole coarse chain
-    # (k-row work) runs driver-side in exact int64 numpy
-    # (_coarse_model_numpy — bit-identical by the parity tests) and
-    # each assignment pass is ONE mapInPandas job. Deletes ~6 tiny
-    # Spark jobs per clustering — the measured fixed floor at small SF.
-    dim = len(dense.head()["vec"]) if dense is not None else 0
-    bound = _FUSED_MAX_CELLS if _max_fused_cells is None else _max_fused_cells
-    if dense is not None and k * dim <= bound:
-        f0_rows = (
-            w.join(F.broadcast(seed_df), "doc_id")
-            .select("cluster", "word", F.col("w").alias("cw"))
-            .filter(F.col("cw") != 0)
-            .collect()
-        )
-        if f0_rows:
-            a2, _model = _fused_chain(w, dense, f0_rows, n_list, n_probe)
-            return (a2, _model) if _want_model else a2
-    if _want_model and dense is None:
-        raise ValueError("a distributed model still needs the dense form")
-
+    ids = dense.select("doc_id") if dense is not None else w.select("doc_id").distinct()
     # pass-1 fine centroids = the seed vectors (exact zeros dropped —
     # they contribute nothing to c2 or any dot; mirrors the oracle CTE)
-    f0 = (
-        w.join(F.broadcast(seed_df), "doc_id")
-        .select("cluster", "word", F.col("w").alias("cw"))
-        .filter(F.col("cw") != 0)
-        .localCheckpoint(eager=True)
-    )
+    f0 = _seed_centroids(w, ids, k).filter(F.col("cw") != 0)
+    # the fused tier is decided from the dense dim BEFORE building the
+    # distributed coarse chain: within the bound the k×d fine codebook
+    # is collected anyway, so the whole coarse chain (k-row work) runs
+    # driver-side — ~6 tiny Spark jobs fewer per clustering, the
+    # measured fixed floor at small SF
+    dim = len(dense.head()["vec"]) if dense is not None else 0
+    if dense is not None and k * dim <= _FUSED_MAX_CELLS:
+        f0_rows = f0.collect()
+        if f0_rows:
+            a2, model = _fused_chain(w, dense, f0_rows, n_list, n_probe)
+            return (a2, model) if _want_model else a2
+    if _want_model and dense is None:
+        raise ValueError("a distributed model still needs the dense form")
+    f0 = f0.localCheckpoint(eager=True)
 
-    # coarse codebook: 2-pass fixed-point Lloyd over the k seed vectors
-    # (re-keyed by fine cluster id), into n_list coarse lists
+    # coarse codebook: one fixed-point Lloyd pass over the k seed vectors
+    # (re-keyed by fine cluster id) from n_list md5-first seeds
     sw = f0.select(F.col("cluster").alias("doc_id"), "word", F.col("cw").alias("w"))
-    sd2 = sw.groupBy("doc_id").agg(F.sum(F.col("w") * F.col("w")).alias("x2"))
-    cseed_rows = (
-        sw.select("doc_id")
-        .distinct()
-        .orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id")
-        .limit(n_list)
-        .collect()
-    )
-    cseed_df = local_df(
-        spark, [(r["doc_id"], i) for i, r in enumerate(cseed_rows)], "doc_id long, cluster int"
-    )
-    g0 = sw.join(F.broadcast(cseed_df), "doc_id").select(
-        "cluster", "word", F.col("w").alias("cw")
-    )
-    ca1 = _assign_fixedpoint(sw, sd2, g0)
-    g = _centroid_update(sw, ca1).localCheckpoint(eager=True)
-
-    # fine→coarse map for pass 1: quantize the SEED vectors against G
-    cmap1 = (
-        _assign_fixedpoint(sw, sd2, g)
-        .select(F.col("doc_id").cast("int").alias("cluster"), F.col("cluster").alias("m"))
-        .select("cluster", "m")
-    )
+    g0 = _seed_centroids(sw, sw.select("doc_id").distinct(), n_list)
+    g = _centroid_update(sw, _assign_fixedpoint(sw, _x2(sw), g0)).localCheckpoint(eager=True)
     g_probe = g.select(F.col("cluster").alias("m"), "word", F.col("cw").alias("gw"))
     g_rows = g_probe.collect() if dense is not None else None  # c×d rows, bounded
 
-    # One hierarchical assignment pass. Remaining kernel tiers (the
-    # fused one-pass kernel returned above when the k×d codebook fit
-    # the closure bound): (2) numpy probes (c×d codebook — bounded at
-    # ANY scale: c ~ sqrt(2k)) + distributed join scoring; (3) all-join
-    # form. Probe ranking is always restricted to lists that HOLD at
-    # least one fine centroid (a doc probing only fine-empty lists
-    # would otherwise get zero candidates and silently vanish from the
-    # assignment).
     def _pass(cent: DataFrame, cmap: DataFrame) -> DataFrame:
         if dense is not None:
-            lists = {r["m"] for r in cmap.select("m").distinct().collect()}  # <= c rows
-            probes = _probe_lists_numpy(
-                dense, [r for r in g_rows if r["m"] in lists], n_probe
-            )
-        else:
-            gl = g_probe.join(F.broadcast(cmap.select("m").distinct()), "m")
-            probes = _probe_lists(w, d2, gl, n_probe)
-        return _assign_via_probes(w, d2, cent, probes, cmap)
+            return _assign_numpy_probes(w, dense, g_rows, cent, cmap, n_probe)
+        gl = g_probe.join(F.broadcast(cmap.select("m").distinct()), "m")
+        return _assign_via_probes(w, d2, cent, _probe_lists(w, d2, gl, n_probe), cmap)
 
-    a1 = _pass(f0, cmap1).localCheckpoint(eager=True)
-
+    a1 = _pass(f0, _quantize(f0, g)).localCheckpoint(eager=True)
     c1 = _centroid_update(w, a1).localCheckpoint(eager=True)
     # re-quantize the MOVED fine centroids against the same fixed G
-    c1w = c1.select(F.col("cluster").cast("long").alias("doc_id"), "word", F.col("cw").alias("w"))
-    c1d2 = c1w.groupBy("doc_id").agg(F.sum(F.col("w") * F.col("w")).alias("x2"))
-    cmap2 = (
-        _assign_fixedpoint(c1w, c1d2, g)
-        .select(F.col("doc_id").cast("int").alias("cluster"), F.col("cluster").alias("m"))
-        .select("cluster", "m")
-    )
+    cmap2 = _quantize(c1, g)
     if _want_model:
         cmap2 = cmap2.localCheckpoint(eager=True)  # freeze the map the model holds
-    a2 = _pass(c1, cmap2)
-    a2 = a2.localCheckpoint(eager=True)
-    if _want_model:
-        # the large-k model: centroid TABLES, not collected rows — c1 is
-        # k×d rows (eagerly checkpointed above), cmap2 is k rows, and
-        # g_rows is the c×d coarse codebook (c ~ sqrt(2k), bounded at
-        # any scale) that the numpy probe kernel needs in its closure
-        return a2, {
-            "kind": "distributed",
-            "g_rows": g_rows,
-            "cent_df": c1,
-            "cmap_df": cmap2,
-            "n_probe": n_probe,
-        }
-    return a2
+    a2 = _pass(c1, cmap2).localCheckpoint(eager=True)
+    if not _want_model:
+        return a2
+    # the large-k model: centroid TABLES, not collected rows — c1 is k×d
+    # rows, cmap2 is k rows, and g_rows is the c×d coarse codebook
+    # (c ~ sqrt(2k), bounded at any scale) the numpy probe kernel needs
+    return a2, {
+        "kind": "distributed",
+        "g_rows": g_rows,
+        "cent_df": c1,
+        "cmap_df": cmap2,
+        "n_probe": n_probe,
+    }
 
 
 def kmeans_ml(
@@ -1459,7 +1312,16 @@ def _assign(
     c_rows = [
         (c, w, wt) for c, vec in centroids.items() for w, wt in vec.items()
     ]
-    c_df = local_df(spark, c_rows, "cluster int, word string, cweight double")
+    # the centroid words take the entries' word type, so integer words
+    # stay Arrow-convertible and join without a cast
+    c_schema = T.StructType(
+        [
+            T.StructField("cluster", T.IntegerType()),
+            docs_vec.schema["entries"].dataType.elementType["word"],
+            T.StructField("cweight", T.DoubleType()),
+        ]
+    )
+    c_df = local_df(spark, c_rows, c_schema)
     c_norms = local_df(
         spark,
         [(c, sum(v * v for v in vec.values())) for c, vec in centroids.items()],
@@ -1480,10 +1342,4 @@ def _assign(
             F.greatest(F.col("x2") + F.col("c2") - 2 * F.col("dot"), F.lit(0.0)),
         )
     )
-    # O32 argmin with the defined tie-break: lowest cluster index wins.
-    best = dist.groupBy("doc_id").agg(
-        F.min_by(
-            F.struct("cluster", "dist2"), F.struct("dist2", "cluster")
-        ).alias("best")
-    )
-    return best.select("doc_id", F.col("best.cluster").alias("cluster"), F.col("best.dist2").alias("dist2"))
+    return _nearest(dist)

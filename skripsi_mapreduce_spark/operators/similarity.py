@@ -394,24 +394,39 @@ def _py_dot_i64(a: list[float], b: list[float]) -> int:
     )
 
 
+def _md5_first(df: DataFrame, n: int, id_col: str = "doc_id") -> DataFrame:
+    """The ``n`` rows of ``df`` with the smallest ``(md5(id), id)``: the
+    engine's one deterministic, engine-portable seed order (a SQL oracle
+    replays it as ``ORDER BY md5(CAST(id AS VARCHAR)), id``). Every seed
+    pick uses it: the index/codebook builders through
+    :func:`_md5_seed_vectors` and the fixed-point K-Means family's fine
+    and coarse seeds. :func:`_md5_key` is its Python twin."""
+    return df.orderBy(F.md5(F.col(id_col).cast("string")), id_col).limit(n)
+
+
+def _md5_key(i: int) -> tuple[str, int]:
+    """Python twin of :func:`_md5_first`'s sort key: hashlib md5 of the
+    decimal string equals Spark's ``md5(cast(id as string))``."""
+    import hashlib
+
+    return hashlib.md5(str(i).encode()).hexdigest(), i
+
+
 def _md5_seed_vectors(
     emb, n: int, id_col: str, vec_col: str, needed: str | None = None
 ) -> dict[int, list[float]]:
-    """The engine's ONE deterministic seed draw: the ``n`` vectors with
-    the smallest ``(md5(id), id)`` as a {0..n-1: vector} table — shared
-    by every index/codebook builder (ivf_index, pq_topk, ivfpq_topk,
-    ivfpq_rerank_topk_many, write_ivfpq_partitioned) so the ordering,
-    the tie-break, and the cast can never drift between them (oracle
-    parity and append==rebuild both depend on all sites staying in
-    lockstep — round-9 review finding). ``needed`` (a description of
-    the requirement) turns a short corpus into a loud ValueError; None
-    keeps the historical ivf_index behavior of returning fewer rows."""
-    seed_rows = (
-        emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy(F.md5(F.col("_id").cast("string")), "_id")
-        .limit(n)
-        .collect()
-    )
+    """The engine's ONE deterministic seed draw (:func:`_md5_first`,
+    which the fixed-point K-Means seeds use too) as a {0..n-1: vector}
+    table — shared by every index/codebook builder (ivf_index, pq_topk,
+    ivfpq_topk, ivfpq_rerank_topk_many, write_ivfpq_partitioned) so the
+    cast to ``list[float]`` cannot drift between them (oracle parity and
+    append==rebuild both depend on all sites staying in lockstep —
+    round-9 review finding). ``needed`` (a description of the
+    requirement) turns a short corpus into a loud ValueError; None keeps
+    the historical ivf_index behavior of returning fewer rows."""
+    seed_rows = _md5_first(
+        emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")), n, "_id"
+    ).collect()
     if needed is not None and len(seed_rows) < n:
         raise ValueError(
             f"corpus holds {len(seed_rows)} vectors but the index needs "

@@ -24,7 +24,7 @@ from ..operators import similarity as sim
 from ..operators import text_analysis as ta
 from ..operators.etl import assign_sequential_ids
 from ..functions.text import TOKEN_PATTERN
-from ..operators.kmeans import kmeans_fixedpoint
+from ..operators.kmeans import dense_e4_long_form, kmeans_fixedpoint
 from ..operators.tfidf import tokens_long
 from .relational import ORACLE, QUERIES, e_int, e_int_sql, query
 
@@ -1409,11 +1409,7 @@ def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dense-signed twin of kmeans_documents, running the identical
     exact-int Lloyd loop (operators/kmeans.kmeans_fixedpoint). Returns
     (cluster, n_members, sse_e8)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    w = emb.select(
-        F.col("vec_id").alias("doc_id"),
-        F.posexplode("embedding").alias("word", "x"),
-    ).select("doc_id", "word", e_int(F.col("x").cast("double"), 4).alias("x_e4"))
+    w = dense_e4_long_form(load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding")
     return kmeans_fixedpoint(w, k=4, n_assign_passes=2, weight_col="x_e4")
 
 

@@ -2127,8 +2127,7 @@ def stream_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs. The zero-pair case rides a sentinel row into the aggregation
     (stream-stream outer joins need watermarks; a union does not),
     reproducing the batch COALESCE semantics exactly."""
-    from ..functions.numeric import e_int
-    from ..operators.kmeans import kmeans_fixedpoint_ivf_model
+    from ..operators.kmeans import dense_e4_long_form, kmeans_fixedpoint_ivf_model
     from ..streaming.semantic import semantic_verdicts_stream, stream_embeddings
     from ..streaming.windows import run_to_memory_sink, state_partitions
 
@@ -2141,9 +2140,7 @@ def stream_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     off = _mx + 1
     corpus = emb.filter(F.col("vec_id") % 5 != 0)
     k = max(2, -(-corpus.count() // _SEM_TARGET))
-    w = corpus.select(
-        F.col("vec_id").alias("doc_id"), F.posexplode("embedding").alias("word", "x")
-    ).select("doc_id", "word", e_int(F.col("x").cast("double"), 4).alias("x_e4"))
+    w = dense_e4_long_form(corpus, "vec_id", "embedding")
     dense_c = corpus.select(
         F.col("vec_id").cast("long").alias("doc_id"), F.col("embedding").alias("vec")
     )

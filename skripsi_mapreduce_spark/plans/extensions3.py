@@ -2292,14 +2292,13 @@ def _register_cluster_keywords() -> None:
 
         # persist, not localCheckpoint: the lazy-checkpoint handle pays a
         # ~2s plan->RDD conversion at construction; ONE columnar cache
-        # serves both the kmeans chain (persist_weights=False — its pass
-        # chain reads this cache through a trivial projection) and the
-        # labeling join
+        # serves both the kmeans chain (its lazy output caches nothing of
+        # its own — the pass chain reads this cache through a trivial
+        # projection) and the labeling join
         w = _tfidf_weight_e4(spark, sf_dir).persist()
         assign = kmeans_fixedpoint(
             w, k=5, n_assign_passes=2, weight_col="weight_e4",
             output="assignments_lazy",  # single consumer — no extra job
-            persist_weights=False,
         )
         ct = (
             w.join(assign.select("doc_id", "cluster"), "doc_id")

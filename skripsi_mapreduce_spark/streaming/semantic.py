@@ -135,8 +135,8 @@ def serve_semantic_verdicts_foreachbatch(
     coarse probes + distributed join scoring) and the verdicts come
     from dedup.assigned_batch_verdicts — the SAME function the batch
     entry calls, so stream and batch verdicts are bit-identical BY
-    CONSTRUCTION (and pinned by test across the max_fused_cells
-    boundary).
+    CONSTRUCTION (and pinned by test across the fused closure bound,
+    ``kmeans._FUSED_MAX_CELLS``).
 
     Replay invariance holds for free: a doc's verdict depends only on
     the static corpus and its own vector, so per-micro-batch outputs

@@ -161,16 +161,31 @@ def test_kmeans_non_string_words_match_string_words(spark, features, monkeypatch
     words take the join path; they must cluster exactly like the same
     corpus with string words, whether the string words take the
     constant-centroid path or (cap 0) the join path too. The shared
-    update must keep integer words integers."""
+    update must keep integer words integers, and the join kernel's
+    centroid table must take the integer word type: a string table
+    joins through a cast on ``word``."""
+    import re
+
     from skripsi_mapreduce_spark.operators import kmeans as km
 
     words = sorted(r["word"] for r in features.select("word").distinct().collect())
     ids = spark.createDataFrame(list(enumerate(words)), "word_id int, word string")
     int_feats = features.join(ids, "word").select("doc_id", F.col("word_id").alias("word"), "weight")
+    join_plans = []
+    assign = km._assign
+
+    def spy(*args):
+        out = assign(*args)
+        join_plans.append(out._jdf.queryExecution().optimizedPlan().toString())
+        return out
+
+    monkeypatch.setattr(km, "_assign", spy)
     for cap in (km.CENTROID_LITERAL_CAP, 0):
         monkeypatch.setattr(km, "CENTROID_LITERAL_CAP", cap)
         a = kmeans(spark, features, k=3, max_iter=10, seed=42)
+        join_plans.clear()
         b = kmeans(spark, int_feats, k=3, max_iter=10, seed=42)
+        assert join_plans and not any(re.search(r"cast\(word#", p) for p in join_plans)
         assert {r["doc_id"]: r["cluster"] for r in a.assignments.collect()} == {
             r["doc_id"]: r["cluster"] for r in b.assignments.collect()
         }
@@ -252,15 +267,19 @@ def test_kmeans_literal_assign_plan_size_independent_of_k(spark):
     assert counts == [1, 1]
 
 
-def test_kmeans_fixedpoint_signed_features(spark):
+def test_kmeans_fixedpoint_signed_features(spark, monkeypatch):
     """Dense signed features (embedding-style long form): negative
     centroid weights must survive the centroid zero-drop (!= 0, not > 0)
     and the rounded-mean DIV must truncate toward zero exactly like the
     DuckDB oracle's // — pinned here against a Python twin of the same
-    integer rules."""
+    integer rules, summary and assignments, on every pass-loop path:
+    the pivot kernel on collected centroids, the pivot kernel past
+    ``_CENT_COLLECT_MAX`` (checkpointed centroids and the kernel's own
+    ||c||^2 collect), the lineage-cut loop past 4 passes, and the join
+    kernel (pivot cutoff 0)."""
     import hashlib
 
-    from skripsi_mapreduce_spark.operators.kmeans import kmeans_fixedpoint
+    from skripsi_mapreduce_spark.operators import kmeans as km
 
     rows = []
     vecs = {
@@ -275,91 +294,102 @@ def test_kmeans_fixedpoint_signed_features(spark):
         for d, x in enumerate(v):
             rows.append((did, d, x))
     w = spark.createDataFrame(rows, "doc_id long, word int, w_e4 long")
-    got = {
-        r["cluster"]: (r["n_members"], r["sse_e8"])
-        for r in kmeans_fixedpoint(w, k=2, n_assign_passes=2, weight_col="w_e4").collect()
-    }
 
     # ---- python twin (identical integer rules) ----
     def trunc_div(a, b):
         q = abs(a) // abs(b)
         return q if (a >= 0) == (b >= 0) else -q
 
-    seeds = sorted(vecs, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))[:2]
-    cent = {c: dict(enumerate(vecs[i])) for c, i in enumerate(seeds)}
-
     def dist2(v, cw):
         keys = set(range(len(v))) | set(cw)
         return sum((v[d] - cw.get(d, 0)) ** 2 for d in keys)
 
-    assign = {}
-    for p in range(2):
-        assign = {
-            i: min(cent, key=lambda c: (dist2(v, cent[c]), c)) for i, v in vecs.items()
-        }
-        if p == 1:
-            break
-        new = {}
-        for c in cent:
-            members = [vecs[i] for i in assign if assign[i] == c]
-            n = len(members)
-            cw = {}
-            for d in range(3):
-                s = sum(m[d] for m in members)
-                val = trunc_div(2 * s + n, 2 * n)
-                if val != 0:
-                    cw[d] = val
-            new[c] = cw
-        cent = new
-    want = {}
-    for c in cent:
-        members = [i for i in assign if assign[i] == c]
-        want[c] = (len(members), sum(dist2(vecs[i], cent[c]) for i in members))
-    assert got == want, f"spark={got} python={want}"
-    # the corpus has two clean signed clusters; a >0 zero-drop would
-    # discard the negative centroid coordinates and merge them
-    assert sorted(n for n, _ in got.values()) == [3, 3]
+    def twin(passes):
+        seeds = sorted(vecs, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))[:2]
+        cent = {c: dict(enumerate(vecs[i])) for c, i in enumerate(seeds)}
+        for p in range(passes):
+            assign = {
+                i: min(cent, key=lambda c: (dist2(v, cent[c]), c)) for i, v in vecs.items()
+            }
+            if p == passes - 1:
+                break
+            new = {}
+            for c in set(assign.values()):  # empty clusters vanish
+                members = [vecs[i] for i in assign if assign[i] == c]
+                n = len(members)
+                cw = {}
+                for d in range(3):
+                    val = trunc_div(2 * sum(m[d] for m in members) + n, 2 * n)
+                    if val != 0:
+                        cw[d] = val
+                new[c] = cw
+            cent = new
+        return {i: (c, dist2(vecs[i], cent[c])) for i, c in assign.items()}
+
+    configs = [(2, {}), (2, {"_CENT_COLLECT_MAX": 1}), (5, {}), (5, {"_PIVOT_MAX_K": 0})]
+    for passes, patch in configs:
+        want = twin(passes)
+        want_summary: dict[int, tuple[int, int]] = {}
+        for c, d in want.values():
+            n, sse = want_summary.get(c, (0, 0))
+            want_summary[c] = (n + 1, sse + d)
+        with monkeypatch.context() as m:
+            for name, value in patch.items():
+                m.setattr(km, name, value)
+            summary = km.kmeans_fixedpoint(
+                w, k=2, n_assign_passes=passes, weight_col="w_e4"
+            ).collect()
+            assigned = km.kmeans_fixedpoint(
+                w, k=2, n_assign_passes=passes, weight_col="w_e4", output="assignments"
+            ).collect()
+        got = {r["cluster"]: (r["n_members"], r["sse_e8"]) for r in summary}
+        assert got == want_summary, f"{passes} {patch}: spark={got} python={want_summary}"
+        assert {r["doc_id"]: (r["cluster"], r["dist2"]) for r in assigned} == want
+        # the corpus has two clean signed clusters; a >0 zero-drop would
+        # discard the negative centroid coordinates and merge them
+        assert sorted(n for n, _ in got.values()) == [3, 3]
 
 
-def test_fixedpoint_pivot_kernel_bit_equal_to_join(spark):
+def test_fixedpoint_pivot_kernel_bit_equal_to_join(spark, monkeypatch):
     """The pivot assignment kernel (one doc-keyed pivot + expression
     argmin) must reproduce the (doc, cluster)-join form bit-for-bit —
-    summary AND assignments surfaces."""
-    from skripsi_mapreduce_spark.operators.kmeans import kmeans_fixedpoint
+    summary AND assignments surfaces (pivot cutoff 0 forces the join
+    kernel)."""
+    from skripsi_mapreduce_spark.operators import kmeans as km
     from skripsi_mapreduce_spark.plans.extensions import _tfidf_weight_e4
 
     from .conftest import SF_DIR
 
     w = _tfidf_weight_e4(spark, SF_DIR)
+
+    def run(out):
+        return sorted(
+            tuple(r)
+            for r in km.kmeans_fixedpoint(
+                w, k=5, n_assign_passes=2, weight_col="weight_e4", output=out
+            ).collect()
+        )
+
     for out in ("summary", "assignments"):
-        a = sorted(
-            tuple(r)
-            for r in kmeans_fixedpoint(
-                w, k=5, n_assign_passes=2, weight_col="weight_e4",
-                output=out, assign_kernel="pivot",
-            ).collect()
-        )
-        b = sorted(
-            tuple(r)
-            for r in kmeans_fixedpoint(
-                w, k=5, n_assign_passes=2, weight_col="weight_e4",
-                output=out, assign_kernel="join",
-            ).collect()
-        )
+        a = run(out)
+        with monkeypatch.context() as m:
+            m.setattr(km, "_PIVOT_MAX_K", 0)
+            b = run(out)
         assert a == b and len(a) > 0
 
 
-def test_ivf_model_distributed_tier_bit_equal_to_fused(spark):
+def test_ivf_model_distributed_tier_bit_equal_to_fused(spark, monkeypatch):
     """The frozen-model kernel ladder (round-7): past the fused closure
     bound, kmeans_fixedpoint_ivf_model returns a DISTRIBUTED model
     (centroid/cmap DataFrames + the bounded c×d coarse rows) and
     assign_with_model routes through numpy probes + the join-scoring
     tier. At a size BOTH tiers can run, training assignments AND
     batch quantization must be bit-identical across the boundary
-    (max_fused_cells=0 forces the distributed tier)."""
+    (a closure bound of 0 cells forces the distributed tier)."""
     from pyspark.sql import functions as F
 
     from skripsi_mapreduce_spark.functions.numeric import e_int
+    from skripsi_mapreduce_spark.operators import kmeans as km
     from skripsi_mapreduce_spark.operators.kmeans import (
         assign_with_model,
         kmeans_fixedpoint_ivf_model,
@@ -388,9 +418,9 @@ def test_ivf_model_distributed_tier_bit_equal_to_fused(spark):
     a_f, m_f = kmeans_fixedpoint_ivf_model(
         longform(corpus), 12, weight_col="x_e4", dense=dense(corpus)
     )
+    monkeypatch.setattr(km, "_FUSED_MAX_CELLS", 0)  # 12×64 cells > 0: the large-k tier
     a_d, m_d = kmeans_fixedpoint_ivf_model(
-        longform(corpus), 12, weight_col="x_e4", dense=dense(corpus),
-        max_fused_cells=0,  # 12×64 cells > 0: forces the large-k tier
+        longform(corpus), 12, weight_col="x_e4", dense=dense(corpus)
     )
     assert (m_f["kind"], m_d["kind"]) == ("fused", "distributed")
     assert sorted(map(tuple, a_f.collect())) == sorted(map(tuple, a_d.collect()))
@@ -419,14 +449,14 @@ def test_assignments_lazy_equals_eager(spark):
 
 
 def test_kmeans_fixedpoint_releases_weights_cache(spark):
-    """Round-10 (round-9 verdict item): persist_weights=True must leave
-    NO net DataFrame cache behind on the summary and assignments
-    outputs — both materialize eagerly, so the weights cache's last
-    consumer is known and it unpersists before returning. Only
+    """Round-10 (round-9 verdict item): kmeans_fixedpoint must leave NO
+    net DataFrame cache behind on any output. The summary and
+    assignments outputs cache the weights for their passes and, as both
+    materialize eagerly, release the cache before returning;
     assignments_lazy (whose point is deferring the chain into the
-    consumer's first action) keeps its session cache, as documented.
-    CacheManager is the right probe: DataFrame.persist registers there,
-    RDD-level localCheckpoints do not."""
+    consumer's first action) caches nothing. CacheManager is the right
+    probe: DataFrame.persist registers there, RDD-level
+    localCheckpoints do not."""
     from skripsi_mapreduce_spark.operators.kmeans import kmeans_fixedpoint
 
     cm = spark._jsparkSession.sharedState().cacheManager()
@@ -449,8 +479,7 @@ def test_kmeans_fixedpoint_releases_weights_cache(spark):
         w, k=3, n_assign_passes=2, weight_col="w_e4", output="assignments_lazy"
     )
     assert lazy.count() == 40
-    assert not cm.isEmpty(), "assignments_lazy is DOCUMENTED to keep its cache"
-    spark.catalog.clearCache()
+    assert cm.isEmpty(), "assignments_lazy registered a weights cache"
 
 
 def test_cluster_keywords_entry_releases_cache(spark):

@@ -285,6 +285,60 @@ def test_minhash_kernel_plan_shape(spark, kernel, exchanges, aggregates):
     assert len(re.findall(r"HashAggregate", plan)) == aggregates
 
 
+@pytest.mark.parametrize(
+    "kernel, jobs",
+    [("kmeans_fixedpoint", 23), ("kmeans_fixedpoint_ivf", 11), ("assign_with_model", 2)],
+)
+def test_fixedpoint_kernel_job_count(spark, kernel, jobs):
+    """Job-count budget for the fixed-point K-Means kernels. They take
+    eager checkpoints and driver collects while they build, so a plan
+    dump does not show their jobs: a statusTracker job group counts the
+    jobs of the call plus one count() of its result — the summary on
+    TF-IDF e4 weights (pivot kernel on collected centroids), the fused
+    IVF kernel, and a batch through a fused model."""
+    from pyspark.sql import functions as F
+
+    from skripsi_mapreduce_spark.functions.numeric import e_int
+    from skripsi_mapreduce_spark.operators import kmeans as km
+    from skripsi_mapreduce_spark.plans.extensions import _tfidf_weight_e4
+
+    if kernel == "kmeans_fixedpoint":
+        w = _tfidf_weight_e4(spark, SF_DIR)
+
+        def call():
+            return km.kmeans_fixedpoint(w, k=5, n_assign_passes=2, weight_col="weight_e4")
+
+    else:
+        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        dense = emb.select(
+            F.col("vec_id").cast("long").alias("doc_id"), F.col("embedding").alias("vec")
+        )
+        corpus = dense.filter(F.col("doc_id") % 5 != 0)
+        w = corpus.select("doc_id", F.posexplode("vec").alias("word", "x")).select(
+            "doc_id", "word", e_int(F.col("x").cast("double"), 4).alias("x_e4")
+        )
+        if kernel == "kmeans_fixedpoint_ivf":
+
+            def call():
+                return km.kmeans_fixedpoint_ivf(w, k=10, weight_col="x_e4", dense=corpus)
+
+        else:
+            _, model = km.kmeans_fixedpoint_ivf_model(w, 10, weight_col="x_e4", dense=corpus)
+            assert model["kind"] == "fused"
+
+            def call():
+                return km.assign_with_model(dense.filter(F.col("doc_id") % 5 == 0), model)
+
+    sc = spark.sparkContext
+    group = f"fixedpoint-job-count-{kernel}"
+    sc.setJobGroup(group, "fixed-point job-count gate")
+    try:
+        call().count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+
+
 def test_bloom_probe_is_broadcast_join(spark):
     """The Bloom bit table (≤ m rows) must reach the probe side as a
     broadcast — a shuffled probe would defeat the sketch's purpose as a

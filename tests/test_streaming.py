@@ -393,9 +393,9 @@ def test_stream_semantic_verdicts_invariant_to_microbatch_slicing(spark, tmp_pat
     assert len({q for q in os.listdir(src) if q.endswith(".parquet")}) >= 2
 
 
-def test_stream_semantic_large_k_foreachbatch_route(spark, tmp_path):
+def test_stream_semantic_large_k_foreachbatch_route(spark, tmp_path, monkeypatch):
     """Round-8: the streaming SemDeDup twin's LARGE-K route. A model
-    built past the fused closure bound (max_fused_cells=0 forces the
+    built past the fused closure bound (a bound of 0 cells forces the
     'distributed' kind) cannot ride the single-aggregation streaming
     plan — semantic_verdicts_stream must refuse it with a descriptive
     error, and serve_semantic_verdicts_foreachbatch must serve the same
@@ -407,6 +407,7 @@ def test_stream_semantic_large_k_foreachbatch_route(spark, tmp_path):
 
     from skripsi_mapreduce_spark.io import load_table
     from skripsi_mapreduce_spark.functions.numeric import e_int
+    from skripsi_mapreduce_spark.operators import kmeans as km
     from skripsi_mapreduce_spark.operators.dedup import semantic_incremental
     from skripsi_mapreduce_spark.operators.kmeans import kmeans_fixedpoint_ivf_model
     from skripsi_mapreduce_spark.streaming.semantic import (
@@ -432,9 +433,11 @@ def test_stream_semantic_large_k_foreachbatch_route(spark, tmp_path):
     dense_c = corpus.select(
         F.col("vec_id").cast("long").alias("doc_id"), F.col("embedding").alias("vec")
     )
-    corpus_assign, model = kmeans_fixedpoint_ivf_model(
-        w, k, n_probe=2, weight_col="x_e4", dense=dense_c, max_fused_cells=0
-    )
+    with monkeypatch.context() as m:
+        m.setattr(km, "_FUSED_MAX_CELLS", 0)
+        corpus_assign, model = kmeans_fixedpoint_ivf_model(
+            w, k, n_probe=2, weight_col="x_e4", dense=dense_c
+        )
     assert model["kind"] == "distributed"
 
     src = str(tmp_path / "batch_files")

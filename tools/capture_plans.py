@@ -2,6 +2,13 @@
 plans/<tag>/<name>_<suffix>.txt plus a one-line-per-entry plan-shape
 summary (Exchange count, python-eval nodes, join strategies) on stdout.
 
+Each summary line ends with ``jobs=<n>``: the Spark jobs the entry
+submits from the calling thread while it builds its plan (eager
+checkpoints, probes, collects), plus one ``count()`` of the result,
+counted through a statusTracker job group. A plan dump does not show
+the build-time jobs, so this is the number to compare before and after
+a kernel change.
+
 Usage::
 
     python tools/capture_plans.py r11 before [sf_dir] [names...]
@@ -56,17 +63,24 @@ def main() -> None:
         app_name="capture_plans",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
+    sc = spark.sparkContext
     todo = names or sorted(QUERIES)
     for name in todo:
+        group = f"capture_plans:{name}"
+        sc.setJobGroup(group, name)
         try:
             df = QUERIES[name](spark, sf_dir)
             txt = plan_text(df)
+            df.count()
         except Exception as exc:  # capture must not abort the sweep
             txt = f"ERROR building plan: {exc}\n"
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(txt)
-        print(f"{name}: {shape(txt)}", flush=True)
+        print(f"{name}: {shape(txt)} jobs={jobs}", flush=True)
     spark.stop()
 
 
