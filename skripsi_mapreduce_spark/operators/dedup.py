@@ -18,16 +18,26 @@ hash functions):
 
 Everything is built-in DataFrame ops (md5, explode, groupBy, joins) —
 no Python UDFs — so the whole family stays inside whole-stage codegen.
+Expressions whose width grows with the hash count, the bitmap word count
+or the band count are built from ONE SQL string each (``F.expr``), not
+from per-term Column calls: in PySpark 4 every Column method call costs
+about five py4j round trips (call-site capture), which made plan
+building, not execution, the fixed cost of a small call.
 
 The MinHash and n-gram kernels (minhash_near_dups, minhash_dup_edges,
 minhash_near_dups_against, ngram_near_dups) are built from one copy of
 each step:
 
 - fingerprint cascade (:func:`_fingerprint_cascade`): identical shingle
-  sets collapse to one representative; LSH and verify run on those;
-- signatures (:func:`_minhash_bands`): the per-hash MIN aggregates and
-  the band-hash array, in :func:`_band_hash_wide` alone or fused with the
-  bitmaps in :func:`_fused_sig_table` when the dense dictionary fits;
+  sets collapse to one representative; LSH and verify run on those.
+  minhash_near_dups_against under the dictionary cap skips it: there
+  the fused table's bitmap is an exact set fingerprint, so identical
+  corpus contents collapse on it directly;
+- signatures: the seeded md5 family (:func:`_seeded_hashes`) and the
+  band-hash aggregate over its per-hash MINs (:func:`_minhash_bands`),
+  hashed per shingle row in :func:`_band_hash_wide`, or once per
+  dictionary word and fused with the bitmaps in :func:`_fused_sig_table`
+  when the dense dictionary fits;
 - band join (:func:`_band_side` + :func:`_first_agreeing_band`): an
   equi-join on (band, band_hash) that keeps each pair at its first
   agreeing band instead of running a distinct;
@@ -154,44 +164,44 @@ def lsh_bands(sigs: DataFrame, rows_per_band: int = 4) -> DataFrame:
     )
 
 
-def _minhash_bands(num_hashes: int, rows_per_band: int) -> tuple[list, F.Column]:
-    """(per-hash MIN aggregates ``_s0..``, the ordered band-hash array over
-    them): each shingle row evaluates all ``num_hashes`` seeded hashes as
-    COLUMNS, one groupBy(doc_id) takes the MINs map-side (partial agg), and
-    band hashes are md5 over the concatenated slice — so the shuffle
-    carries |docs| rows of 16 strings instead of 16×|shingles| exploded
-    rows (the same one-wide-agg trick that made SimHash signatures cheap)."""
-    mins = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"_s{i}")
-        for i in range(num_hashes)
-    ]
+def _seeded_hashes(num_hashes: int) -> list[str]:
+    """SQL for the MinHash family as columns ``_h0..``: ``_h<i>`` =
+    md5('<i>:' || shingle), the same hash :func:`minhash_signatures`
+    explodes per row."""
+    return [f"md5(concat('{i}:', shingle)) AS _h{i}" for i in range(num_hashes)]
+
+
+def _minhash_bands(num_hashes: int, rows_per_band: int) -> F.Column:
+    """The ordered band-hash array as ONE aggregate expression over the
+    seeded-hash columns (:func:`_seeded_hashes`): band b = md5 over the
+    comma-joined per-hash MINs of its slice. One groupBy(doc_id) takes the
+    MINs map-side (partial agg), so the shuffle carries |docs| rows of 16
+    strings instead of 16×|shingles| exploded rows (the same one-wide-agg
+    trick that made SimHash signatures cheap)."""
     # ceil: a trailing partial band hashes just its remainder signatures,
     # matching lsh_bands' `i div rows_per_band` grouping exactly
     n_bands = -(-num_hashes // rows_per_band)
-    bands = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"_s{i}")
-                        for i in range(
-                            b * rows_per_band, min((b + 1) * rows_per_band, num_hashes)
-                        )
-                    ],
-                )
-            )
-            for b in range(n_bands)
-        ]
+    bands = ", ".join(
+        "md5(concat_ws(',', "
+        + ", ".join(
+            f"min(_h{i})"
+            for i in range(b * rows_per_band, min((b + 1) * rows_per_band, num_hashes))
+        )
+        + "))"
+        for b in range(n_bands)
     )
-    return mins, bands
+    return F.expr(f"array({bands})")
 
 
 def _band_hash_wide(sh: DataFrame, num_hashes: int = 16, rows_per_band: int = 4) -> DataFrame:
     """(doc_id, bands: array<string>) — per-document ordered band hashes in
-    ONE wide aggregation (:func:`_minhash_bands`)."""
-    mins, bands = _minhash_bands(num_hashes, rows_per_band)
-    return sh.groupBy("doc_id").agg(*mins).select("doc_id", bands.alias("bands"))
+    ONE wide aggregation (:func:`_minhash_bands`), every seeded hash
+    evaluated per shingle row."""
+    return (
+        sh.selectExpr("doc_id", *_seeded_hashes(num_hashes))
+        .groupBy("doc_id")
+        .agg(_minhash_bands(num_hashes, rows_per_band).alias("bands"))
+    )
 
 
 def lsh_band_hashes(sh: DataFrame, num_hashes: int = 16, rows_per_band: int = 4) -> DataFrame:
@@ -241,8 +251,9 @@ def _lsh_verified_pairs(
     where there were three plus a join, and the bucket arm's verify
     reuses the same table instead of re-probing the dictionary
     (previously a second dictionary job inside jaccard_pairs). Rows
-    are bit-identical: the fused aggregation evaluates exactly the
-    expressions the two tables held."""
+    are bit-identical: the fused aggregation takes the same MINs and
+    bitmap words the two tables held, with each seeded hash evaluated
+    once per dictionary word instead of once per shingle row."""
     # bitmap_max_vocab=0 skips the dense-dictionary probe ENTIRELY (it
     # costs a distinct counting job even when it answers None) —
     # round-9 ADVICE: large-vocab corpora that route to LSH are exactly
@@ -299,9 +310,7 @@ def _lsh_verified_pairs(
             # see _bitmap_overlap_flat): an n_bands-term OR, cheap enough
             # to stay BELOW the fence, welcome in the join condition as an
             # early prune
-            shares_band = F.lit(False)
-            for bd in range(n_bands):
-                shares_band = shares_band | F.expr(f"bba[{bd}] = bbb[{bd}]")
+            shares_band = F.expr(" OR ".join(f"bba[{bd}] = bbb[{bd}]" for bd in range(n_bands)))
             return _bitmap_jaccard(pairs.filter(shares_band), n_words).filter(
                 F.col("jaccard") >= threshold
             )
@@ -451,9 +460,7 @@ def _shingle_bitmaps(sh: DataFrame, max_vocab: int) -> tuple[DataFrame, int] | N
     d, vocab = d_v
     n_words = (vocab + 63) // 64
     ent = sh.join(F.broadcast(d), "shingle")
-    df = ent.groupBy("doc_id").agg(
-        *_word_or_aggs(n_words), F.count("*").alias("n")
-    ).select("doc_id", _word_array(n_words).alias("bm"), "n")
+    df = ent.groupBy("doc_id").agg(_word_bitmap(n_words).alias("bm"), F.count("*").alias("n"))
     return df, n_words
 
 
@@ -475,27 +482,18 @@ def _bitmap_dictionary(
     return d, vocab
 
 
-def _word_or_aggs(n_words: int) -> list:
-    """Flat per-word bitmap aggregates: word w = bit_or of
-    ``shiftleft(1, sid % 64)`` over this doc's sids with sid div 64 = w
-    (NULL when the doc touches no bit in the word — coalesced to 0 by
-    :func:`_word_array`). One groupBy(doc_id) replaces the previous
-    groupBy(doc_id, w) + groupBy(doc_id) two-exchange chain."""
-    return [
-        F.bit_or(
-            F.expr(
-                f"CASE WHEN sid div 64 = {w} "
-                "THEN shiftleft(1L, CAST(sid % 64 AS INT)) END"
-            )
-        ).alias(f"_w{w}")
+def _word_bitmap(n_words: int) -> F.Column:
+    """The flat bitmap aggregate as ONE expression: word w = bit_or of
+    ``shiftleft(1, sid % 64)`` over this doc's sids with sid div 64 = w,
+    0 when the doc touches no bit in the word. One groupBy(doc_id)
+    replaces the previous groupBy(doc_id, w) + groupBy(doc_id)
+    two-exchange chain."""
+    words = ", ".join(
+        f"coalesce(bit_or(CASE WHEN sid div 64 = {w} "
+        "THEN shiftleft(1L, CAST(sid % 64 AS INT)) END), 0L)"
         for w in range(n_words)
-    ]
-
-
-def _word_array(n_words: int) -> F.Column:
-    return F.array(
-        *[F.coalesce(F.col(f"_w{w}"), F.lit(0).cast("long")) for w in range(n_words)]
     )
+    return F.expr(f"array({words})")
 
 
 def _fused_sig_table(
@@ -504,17 +502,25 @@ def _fused_sig_table(
     """(doc_id, bands: array<string>, bm: array<bigint>, n) in ONE
     groupBy(doc_id) over the dictionary-joined shingle rows — the row
     union of :func:`_band_hash_wide` and :func:`_shingle_bitmaps`
-    (bit-identical columns, same expressions) without the second
-    aggregation exchange and the doc_id join the two separate tables
-    cost. ``n`` = count(*) equals the popcount total because the
-    shingle rows are distinct per doc and the dictionary join is 1:1."""
-    mins, bands = _minhash_bands(num_hashes, rows_per_band)
-    ent = sh.join(F.broadcast(d), "shingle")
-    wide = ent.groupBy("doc_id").agg(
-        *mins, *_word_or_aggs(n_words), F.count("*").alias("n")
-    )
-    return wide.select(
-        "doc_id", bands.alias("bands"), _word_array(n_words).alias("bm"), "n"
+    (bit-identical columns) without the second aggregation exchange and
+    the doc_id join the two separate tables cost. ``n`` = count(*) equals
+    the popcount total because the shingle rows are distinct per doc and
+    the dictionary join is 1:1.
+
+    The seeded hashes are evaluated on the DICTIONARY (≤ the cap's 4096
+    rows, before its broadcast), not per (document, shingle) row: each
+    word is hashed once however many documents hold it, the way the
+    reference computes each word's IDF once and joins it to every
+    document. The aggregation takes its MINs over the joined columns."""
+    hashed = d.selectExpr("shingle", "sid", *_seeded_hashes(num_hashes))
+    return (
+        sh.join(F.broadcast(hashed), "shingle")
+        .groupBy("doc_id")
+        .agg(
+            _minhash_bands(num_hashes, rows_per_band).alias("bands"),
+            _word_bitmap(n_words).alias("bm"),
+            F.count("*").alias("n"),
+        )
     )
 
 
@@ -549,10 +555,8 @@ def _bitmap_overlap_flat(n_words: int) -> F.Column:
     (zip_with + aggregate) builds an n_words array object per candidate
     pair; on the quadratic kernels that allocation dominated the stage
     (measured 4.1s -> 0.6s on 7.5M pairs at sf0.1)."""
-    return sum(
-        (F.expr(f"bit_count(ba[{w}] & bb[{w}])").cast("long") for w in range(n_words)),
-        F.lit(0).cast("long"),
-    )
+    terms = " + ".join(f"bit_count(ba[{w}] & bb[{w}])" for w in range(n_words))
+    return F.expr(f"CAST({terms} AS BIGINT)")
 
 
 _FENCE_SEQ = itertools.count()
@@ -949,38 +953,49 @@ def minhash_near_dups_against(
     dup-heavy corpus makes the full (batch x corpus) pair LIST quadratic
     in duplicate-cluster size (measured 21M pairs for a 1k-doc batch at
     sf0.5) — but ingest only needs per-doc verdicts, which are linear in
-    the batch. (2) The fingerprint cascade on BOTH sides: Jaccard depends
-    only on the shingle SET, so identical contents collapse to one
-    representative per side and band join + verification run rep x rep —
-    work scales with distinct contents, not documents; members inherit
-    their rep's verdict through a narrow join. (3) The corpus never
-    self-joins, and at 100 TB the corpus rep-band table is written once,
-    bucketed by (band, band_hash) (io.write_bucketed), so each daily
-    batch probes only its matching buckets.
+    the batch. (2) Identical corpus contents collapse to one row before
+    the band join: Jaccard depends only on the shingle SET, so the band
+    join and verification work scale with distinct corpus contents, not
+    documents. (3) The corpus never self-joins, and at 100 TB the corpus
+    band table is written once, bucketed by (band, band_hash)
+    (io.write_bucketed), so each daily batch probes only its matching
+    buckets.
 
-    Verification is candidate-restricted on both arms. Under the dense
-    dictionary cap (``BITMAP_MAX_VOCAB``, probed on the union of both
-    sides' rep shingles) each side's bitmap and set size ride the band
-    explode and the popcount verify runs inline with the band join. Past
-    the cap, the witness-filtered candidates go through the shared-shingle
-    verify (:func:`_shared_shingle_jaccard`), where each candidate rep
-    pair joins only its own two shingle sets."""
+    Two arms, chosen by the dense dictionary probe (``BITMAP_MAX_VOCAB``)
+    over both sides' shingles, candidate-restricted verification on both:
+
+    - under the cap, ONE fused signature aggregation per side
+      (:func:`_fused_sig_table`, straight on the shingle table): the
+      corpus rows collapse on their bitmap, which under a 1:1 dictionary
+      is an exact set fingerprint, and the batch keeps one row per
+      document, since its rows are the output anyway. Each side's bitmap
+      and set size ride the band explode and the popcount verify runs
+      inline with the band join;
+    - past the cap, the fingerprint cascade on BOTH sides
+      (:func:`_fingerprint_cascade`): band join rep x rep, the
+      witness-filtered candidates through the shared-shingle verify
+      (:func:`_shared_shingle_jaccard`, each candidate rep pair joins only
+      its own two shingle sets), and batch members inherit their rep's
+      verdict through a narrow join."""
     sh_c = shingles(corpus, id_col, text_col, shingle_size).localCheckpoint(eager=False)
     sh_b = shingles(batch, id_col, text_col, shingle_size).localCheckpoint(eager=False)
-    g_c, rep_sh_c = _fingerprint_cascade(sh_c)
-    g_b, rep_sh_b = _fingerprint_cascade(sh_b)
-    # When the shared dictionary fits, each side's band hashes, bitmap
-    # and set size come out of ONE fused aggregation (_fused_sig_table)
-    # instead of a band aggregation per side plus a separate bitmap
-    # build over the union — same rows, three fewer exchanges and one
-    # fewer dictionary job (optimization round 11).
-    d_v = _bitmap_dictionary(rep_sh_b.unionByName(rep_sh_c), BITMAP_MAX_VOCAB)
-    if d_v is not None:
+    # the same vocabulary as the union of both sides' representatives, so
+    # sids and bitmaps are those the cascade would build
+    d_v = _bitmap_dictionary(sh_b.unionByName(sh_c), BITMAP_MAX_VOCAB)
+    bitmap = d_v is not None
+    if bitmap:
         d, vocab = d_v
         n_words = (vocab + 63) // 64
-        wide_b = _fused_sig_table(rep_sh_b, d, n_words, num_hashes, rows_per_band)
-        wide_c = _fused_sig_table(rep_sh_c, d, n_words, num_hashes, rows_per_band)
+        wide_b = _fused_sig_table(sh_b, d, n_words, num_hashes, rows_per_band)
+        # bands and n are functions of bm, so grouping on them splits nothing
+        wide_c = (
+            _fused_sig_table(sh_c, d, n_words, num_hashes, rows_per_band)
+            .groupBy("bm", "bands", "n")
+            .agg(F.min("doc_id").alias("doc_id"))
+        )
     else:
+        _, rep_sh_c = _fingerprint_cascade(sh_c)
+        g_b, rep_sh_b = _fingerprint_cascade(sh_b)
         wide_b = _band_hash_wide(rep_sh_b, num_hashes, rows_per_band)
         wide_c = _band_hash_wide(rep_sh_c, num_hashes, rows_per_band)
     # The bitmap and set size ride the band explode (optimization round
@@ -988,13 +1003,11 @@ def minhash_near_dups_against(
     # union of the two fused tables, giving each side's aggregation TWO
     # differently-pruned consumers — and because column pruning pushes
     # through the aggregate, Catalyst compiled each consumer as its own
-    # aggregation over the checkpointed shingle RDD (the captured
-    # before-plan carries all four HashAggregate pairs and no
-    # ReusedExchange). Carrying (bm, n) through the explode keeps ONE
-    # consumer per side, deletes the two verify hash joins, and is
-    # bounded at scale: it only happens under the dense-dictionary cap,
-    # so bm is ≤ 64 longs per row replicated n_bands (4) ways.
-    bitmap = d_v is not None
+    # aggregation over the checkpointed shingle RDD. Carrying (bm, n)
+    # through the explode keeps ONE consumer per side, deletes the two
+    # verify hash joins, and is bounded at scale: it only happens under
+    # the dense-dictionary cap, so bm is ≤ 64 longs per row replicated
+    # n_bands (4) ways.
     cand = (
         _band_side(wide_b, "a", bitmap)
         .join(_band_side(wide_c, "b", bitmap), ["band", "band_hash"])
@@ -1012,16 +1025,17 @@ def minhash_near_dups_against(
         verified = _bitmap_jaccard(cand.filter(_size_bound(threshold)), n_words)
     else:
         verified = _shared_shingle_jaccard(rep_sh_b, rep_sh_c, cand.select("id_a", "id_b"))
-    rep_best = (
+    best = (
         verified.filter(F.col("jaccard") >= threshold)
         .groupBy("id_a")
         .agg(F.max("jaccard").alias("max_jaccard"))
-        .withColumnRenamed("id_a", "brep")
     )
+    if bitmap:
+        return best.select(F.col("id_a").alias("batch_id"), "max_jaccard")
     # _fingerprint_groups always names its id column "doc_id" (shingles()
     # normalized id_col on the way in), so select the internal name here —
     # F.col(id_col) would raise for any caller with a non-default id_col.
-    return g_b.join(rep_best, g_b["rep"] == rep_best["brep"]).select(
+    return g_b.join(best, F.col("rep") == F.col("id_a")).select(
         F.col("doc_id").alias("batch_id"), "max_jaccard"
     )
 

@@ -1503,14 +1503,17 @@ def _register_incremental() -> None:
         against): every {mod}th document plays the freshly crawled
         batch (proportional at every sf), the rest is the settled corpus,
         and each batch document gets its vetting verdict: the best exact
-        Jaccard >= 0.8 found in the corpus (absent = clean). The kernel
-        runs the fingerprint cascade on BOTH sides and band-joins
-        batch reps x corpus reps only — never corpus x corpus, work ∝
-        distinct contents, output linear in the batch (the full pair
-        list is quadratic in duplicate-cluster size on dup-heavy data:
-        21M pairs at sf0.5). The oracle states the same verdicts at the
-        document level, where candidates and Jaccard are rep-determined
-        anyway. Complements dedup_minhash (within-corpus) and
+        Jaccard >= 0.8 found in the corpus (absent = clean). Under the
+        dense-dictionary cap the kernel runs ONE fused signature
+        aggregation per side, collapses identical corpus contents on
+        their bitmap (an exact set fingerprint) and band-joins batch
+        documents x distinct corpus contents only; past the cap it runs
+        the fingerprint cascade on both sides and band-joins batch reps
+        x corpus reps. Never corpus x corpus, corpus work ∝ distinct
+        contents, output linear in the batch (the full pair list is
+        quadratic in duplicate-cluster size on dup-heavy data: 21M pairs
+        at sf0.5). The oracle states the same verdicts at the document
+        level, where candidates and Jaccard are set-determined anyway. Complements dedup_minhash (within-corpus) and
         dedup_cross_corpus (exact digests across corpora)."""
         from ..functions.numeric import e_int
         from ..operators import dedup as dd

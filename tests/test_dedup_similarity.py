@@ -999,6 +999,106 @@ def test_incremental_over_cap_arm_matches_dictionary_arm(spark, monkeypatch):
     assert 1.0 in verdicts and any(j < 1.0 for j in verdicts)
 
 
+def _fused_vs_per_row(sh, num_hashes=16, rows_per_band=4):
+    """(fused rows, per-row rows): _fused_sig_table against its per-row
+    definition, _band_hash_wide joined with _shingle_bitmaps on doc_id."""
+    d, vocab = dd._bitmap_dictionary(sh, dd.BITMAP_MAX_VOCAB)
+    n_words = (vocab + 63) // 64
+    fused = dd._fused_sig_table(sh, d, n_words, num_hashes, rows_per_band)
+    bm, _ = dd._shingle_bitmaps(sh, dd.BITMAP_MAX_VOCAB)
+    per_row = dd._band_hash_wide(sh, num_hashes, rows_per_band).join(bm, "doc_id")
+    cols = ["doc_id", "bands", "bm", "n"]
+    assert fused.columns == cols
+    assert fused.schema == per_row.select(*cols).schema
+    return (
+        sorted(map(tuple, fused.collect())),
+        sorted(map(tuple, per_row.select(*cols).collect())),
+    )
+
+
+def test_fused_sig_table_equals_per_row_definition(spark):
+    """_fused_sig_table hashes each dictionary word once and takes the
+    MINs over the joined hash columns. Its rows must be bit-identical to
+    the per-row definition (every (document, shingle) row hashed) on the
+    sf0.001 documents, and, on shingles with non-ASCII letters,
+    apostrophes, quotes and 300-character words spread over several
+    bitmap words, also to a hashlib MinHash computed in Python."""
+    from skripsi_mapreduce_spark.io import load_table
+
+    docs = load_table(spark, SF_DIR, "documents")
+    sh = dd.shingles(docs, "doc_id", "text", 1).localCheckpoint(eager=True)
+    fused, per_row = _fused_vs_per_row(sh)
+    assert fused == per_row and len(fused) > 0
+
+    odd = ["don't", "naïve café", "日本語のテキスト", "x" * 300, "it's a 'quote'",
+           "back\\slash", "ünïcödé" * 40, 'say "hi"']
+    plain = [f"w{i:03d}" for i in range(150)]
+    sets = {d: {odd[d - 1], odd[d % 8]} | {w for j, w in enumerate(plain) if j % (d + 1) == 1}
+            for d in range(1, 9)}
+    sets[9] = set(sets[3])  # an identical set under another id
+    rows = [(d, w) for d, ws in sets.items() for w in ws]
+    sh = spark.createDataFrame(rows, "doc_id long, shingle string")
+    vocab = sorted(set().union(*sets.values()))
+    n_words = (len(vocab) + 63) // 64
+    assert n_words >= 2
+    for rows_per_band in (4, 5):  # 5: a trailing partial band
+        fused, per_row = _fused_vs_per_row(sh, 16, rows_per_band)
+        assert fused == per_row and len(fused) == 9
+        for doc_id, bands, bm, n in fused:
+            ws = sets[doc_id]
+            mins = [min(hashlib.md5(f"{i}:{w}".encode()).hexdigest() for w in ws)
+                    for i in range(16)]
+            assert bands == [
+                hashlib.md5(",".join(mins[b:b + rows_per_band]).encode()).hexdigest()
+                for b in range(0, 16, rows_per_band)
+            ]
+            bits = [vocab.index(w) for w in ws]
+            words_ = [sum(1 << (s % 64) for s in bits if s // 64 == k) for k in range(n_words)]
+            assert bm == [x - (1 << 64) if x >= 1 << 63 else x for x in words_]
+            assert n == len(ws)
+
+
+def test_incremental_degenerate_inputs_both_arms(spark, monkeypatch):
+    """minhash_near_dups_against on degenerate inputs: an empty batch, a
+    batch of empty texts, a one-document corpus, and a corpus of many
+    exact copies with identical batch documents. The dictionary arm and
+    the over-cap arm (BITMAP_MAX_VOCAB = 1) return the same verdicts,
+    and only the over-cap arm runs the fingerprint cascade."""
+    text = "alpha beta gamma delta epsilon zeta"
+    schema = "doc_id long, text string"
+    one = [(1, text)]
+    copies = [(i, text) for i in range(1, 41)] + [(99, "one two three four five")]
+    cases = {
+        "empty batch": (one, [], {}),
+        "empty texts": (one, [(10, ""), (11, "  "), (12, "a")], {}),
+        "one-doc corpus": (one, [(10, text), (11, "alpha beta gamma delta")], {10: 1.0}),
+        "exact copies": (
+            copies,
+            [(10, text), (11, text), (12, text), (13, "six seven eight nine")],
+            {10: 1.0, 11: 1.0, 12: 1.0},
+        ),
+    }
+    cascade = dd._fingerprint_cascade
+    calls = []
+    monkeypatch.setattr(
+        dd, "_fingerprint_cascade", lambda sh: calls.append(1) or cascade(sh)
+    )
+
+    def verdicts(corpus, batch):
+        out = dd.minhash_near_dups_against(
+            spark.createDataFrame(corpus, schema), spark.createDataFrame(batch, schema)
+        )
+        assert out.columns == ["batch_id", "max_jaccard"]
+        return {r.batch_id: r.max_jaccard for r in out.collect()}
+
+    dictionary = {name: verdicts(c, b) for name, (c, b, _) in cases.items()}
+    assert not calls, "the dictionary arm ran the fingerprint cascade"
+    monkeypatch.setattr(dd, "BITMAP_MAX_VOCAB", 1)
+    over_cap = {name: verdicts(c, b) for name, (c, b, _) in cases.items()}
+    assert len(calls) == 2 * len(cases), "the over-cap arm was not taken"
+    assert over_cap == dictionary == {name: v for name, (_, _, v) in cases.items()}
+
+
 def test_dup_edges_on_transitive_chain(spark):
     """Chained near-dups (doc_i ~ doc_{i+1} but doc_0 !~ doc_k): the
     keep-list must close transitively — every chain member maps to the

@@ -257,13 +257,17 @@ def test_dedup_bitmap_dictionary_no_single_partition(spark):
 
 @pytest.mark.parametrize(
     "kernel, exchanges, aggregates",
-    [("minhash_dup_edges", 2, 0), ("minhash_near_dups_against", 10, 4)],
+    [("minhash_dup_edges", 2, 0), ("minhash_near_dups_against", 12, 8)],
 )
 def test_minhash_kernel_plan_shape(spark, kernel, exchanges, aggregates):
     """Plan-shape budget for the two near-dedup kernels the benchmark
     runs: an aggregation compiled twice for differently-pruned consumers
     (each side's signature aggregation once had two) shows up here as
-    extra Exchange and HashAggregate nodes."""
+    extra Exchange and HashAggregate nodes. The formatted plan names each
+    node twice (tree and details). minhash_near_dups_against's plan
+    starts at the two shingle checkpoints: one signature aggregation per
+    side, the corpus collapse on the bitmap (the only HashAggregate pair
+    besides the verdict max), the band join and the verdict max."""
     import re
 
     from pyspark.sql import functions as F
@@ -337,6 +341,79 @@ def test_fixedpoint_kernel_job_count(spark, kernel, jobs):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+
+
+def test_incremental_kernel_job_count(spark):
+    """Job-count budget for one minhash_near_dups_against call (the
+    per-batch call the ingest benchmark repeats): the dictionary collect,
+    the lazy checkpoints and the final plan's AQE stages, counted through
+    a statusTracker job group around the call plus collect(). One
+    signature aggregation per side, without the fingerprint cascade,
+    brought it from 21 to 13 jobs."""
+    from pyspark.sql import functions as F
+
+    from skripsi_mapreduce_spark.io import load_table
+    from skripsi_mapreduce_spark.operators import dedup as dd
+
+    docs = load_table(spark, SF_DIR, "documents")
+    corpus = docs.filter(F.col("doc_id") % 5 != 0)
+    batch = docs.filter(F.col("doc_id") % 5 == 0)
+    sc = spark.sparkContext
+    group = "incremental-job-count"
+    sc.setJobGroup(group, "incremental dedup job-count gate")
+    try:
+        rows = dd.minhash_near_dups_against(corpus, batch).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 13
+
+
+def test_wide_expression_build_round_trips(spark, monkeypatch):
+    """Plan building of the bitmap kernels must not cost py4j round trips
+    per bitmap word: the fused signature table and the bitmap Jaccard are
+    built at n_words = 8 and 64 after one warm-up, counting the driver
+    thread's ClientServerConnection.send_command calls. Per-word Column
+    calls (about five round trips each with PySpark 4's call-site
+    capture) cost 3,080 / 1,400 more at 64 words here; one SQL string per
+    wide expression costs nothing more."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    from skripsi_mapreduce_spark.io import local_df
+    from skripsi_mapreduce_spark.operators import dedup as dd
+
+    sh = spark.createDataFrame([(1, "a"), (1, "b"), (2, "b")], "doc_id long, shingle string")
+    d = local_df(spark, [("a", 0), ("b", 1)], "shingle string, sid int")
+    pairs = spark.createDataFrame(
+        [(1, 2, [1] * 64, [3] * 64, 2, 2)],
+        "id_a long, id_b long, ba array<bigint>, bb array<bigint>, na long, nb long",
+    )
+    me = threading.get_ident()
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if threading.get_ident() == me:
+            calls.append(1)
+        return send(self, command)
+
+    def round_trips(build):
+        calls.clear()
+        build()
+        return len(calls)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    builds = {
+        "fused": lambda w: dd._fused_sig_table(sh, d, w, 16, 4),
+        "jaccard": lambda w: dd._bitmap_jaccard(pairs, w),
+    }
+    for build in builds.values():
+        build(8)  # warm-up
+    growth = {k: round_trips(lambda: b(64)) - round_trips(lambda: b(8)) for k, b in builds.items()}
+    assert round_trips(lambda: builds["fused"](8)) > 0, "round trips not counted"
+    assert growth["fused"] < 4 * 56 and growth["jaccard"] < 56, growth
 
 
 def test_bloom_probe_is_broadcast_join(spark):
