@@ -956,10 +956,8 @@ def minhash_near_dups_against(
     the batch. (2) Identical corpus contents collapse to one row before
     the band join: Jaccard depends only on the shingle SET, so the band
     join and verification work scale with distinct corpus contents, not
-    documents. (3) The corpus never self-joins, and at 100 TB the corpus
-    band table is written once, bucketed by (band, band_hash)
-    (io.write_bucketed), so each daily batch probes only its matching
-    buckets.
+    documents. (3) The corpus never self-joins: only batch x corpus band
+    matches are joined. Each call still re-signs the whole corpus.
 
     Two arms, chosen by the dense dictionary probe (``BITMAP_MAX_VOCAB``)
     over both sides' shingles, candidate-restricted verification on both:

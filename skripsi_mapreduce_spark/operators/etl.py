@@ -54,34 +54,45 @@ def assign_sequential_ids(
     A plain ``row_number() OVER (ORDER BY ...)`` collapses to one partition —
     the distributed equivalent of the reference's single reducer
     (ReducerExtractTransform.java:34-48) and just as much of a bottleneck.
-    Instead: range-partition on the order key, rank within each partition,
-    then add per-partition offsets (a handful of counts collected to the
-    driver). Global rank = offset[pid] + local rank, exact regardless of
-    where the sampled range boundaries fall, provided the order key is a
-    total order (callers must include a tiebreak column).
+    Instead: range-partition on the order key and sort within each
+    partition, so a row's local rank is its position in its partition —
+    ``monotonically_increasing_id()`` minus the partition's base
+    (pid << 33) — then add per-partition offsets (a handful of counts
+    collected to the driver). Global rank = offset[pid] + local rank,
+    exact regardless of where the sampled range boundaries fall, provided
+    the order key is a total order (callers must include a tiebreak
+    column). The rows cross ONE exchange: the range partitioning. A
+    ``row_number()`` window over the checkpoint would add a second one —
+    a checkpoint reports no partitioning, so the window re-hashes every
+    row on the partition id.
 
+    The id is an ``int`` while the total fits one (a ``bigint`` past it).
     ``with_total=True`` returns ``(df, n_rows)`` — the total falls out of
     the per-partition counts this operator collects anyway, saving
     callers (e.g. NTILE bucketing) a separate count job.
     """
     if num_partitions is None:
         num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    ranged = df.repartitionByRange(num_partitions, *order_cols).withColumn(
-        "_pid", F.spark_partition_id()
+    ranged = (
+        df.repartitionByRange(num_partitions, *order_cols)
+        .sortWithinPartitions(*order_cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .withColumn("_mono", F.monotonically_increasing_id())
     )
-    ranged = ranged.localCheckpoint(eager=False)  # pin partitioning for both uses
+    # pin partitioning and row order for both uses
+    ranged = ranged.localCheckpoint(eager=False)
     counts = ranged.groupBy("_pid").count().collect()
     offsets = {}
     acc = 0
     for row in sorted(counts, key=lambda r: r["_pid"]):
         offsets[row["_pid"]] = acc
         acc += row["count"]
-    offset_map = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
-    )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    out = ranged.withColumn(id_col, F.row_number().over(w) + offset_map[F.col("_pid")]).drop(
-        "_pid"
+    # an empty input has no counts; the one-entry map types the lookup
+    offset_map = F.create_map(*[F.lit(x) for kv in (offsets or {0: 0}).items() for x in kv])
+    pid = F.col("_pid")
+    rank = F.col("_mono") - F.shiftleft(pid.cast("long"), 33) + 1 + offset_map[pid]
+    out = ranged.withColumn(id_col, rank.cast("int" if acc < 2**31 else "long")).drop(
+        "_pid", "_mono"
     )
     return (out, acc) if with_total else out
 
@@ -94,14 +105,19 @@ def prefix_sum(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Inclusive running SUM of ``value_col`` in ``order_cols`` order,
-    without a global window — the same two-phase shape as
-    :func:`assign_sequential_ids`: range-partition on the order key,
+    without a global window: range-partition on the order key,
     window-cumsum within each partition, then add per-partition sum
     offsets (P driver rows, P = partition count). Exact for any total
     order key (callers must include a tiebreak column). At 100 TB this is
     the difference between a scan-speed running total and the
     ``Exchange SinglePartition`` a bare ``SUM() OVER (ORDER BY ...)``
-    plans."""
+    plans.
+
+    Unlike :func:`assign_sequential_ids`, this keeps its per-partition
+    window and so a second exchange (hash on the partition id over the
+    checkpoint): a running sum depends on the values of every earlier
+    row, which no per-row expression like ``monotonically_increasing_id``
+    can supply."""
     if num_partitions is None:
         num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 1)
     ranged = df.repartitionByRange(num_partitions, *order_cols).withColumn(

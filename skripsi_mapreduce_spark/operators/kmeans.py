@@ -36,6 +36,14 @@ vectors are the only table the whole run pins. Distance uses the
 sparse-safe expansion ||x||^2 + ||c||^2 - 2x.c (the reference's dense
 nested loop, MapperKMean.java:88-92, NPEs on missing keys — §8 Q10).
 
+Driver cost: the k seed vectors are one filtered collect off the
+checkpointed vectors (clusters mapped on the driver, no broadcast join),
+and the constant-centroid assignment and the update are each ONE SQL
+statement (``spark.sql`` over a temporary view, the centroid JSON bound as
+a named parameter), so building an iteration costs about 20 py4j round
+trips instead of the ~600 of the same expressions as Column calls (each
+pays PySpark's call-site capture).
+
 The oracle-exact fixed-point family — ``kmeans_fixedpoint`` (exact
 Lloyd), ``kmeans_fixedpoint_ivf`` (IVF-assigned, for k that grows with
 the corpus), ``kmeans_fixedpoint_ivf_model`` and ``assign_with_model``
@@ -200,18 +208,16 @@ def kmeans(
         )
         id2cluster = {
             r["doc_id"]: pos2cluster[r["_pos"]]
-            for r in ranked.filter(F.col("_pos").isin(list(pos2cluster))).collect()
+            for r in ranked.filter(f"_pos IN ({', '.join(map(str, pos2cluster))})").collect()
         }
-    seed_ids = local_df(
-        spark, [(d, c) for d, c in id2cluster.items()], "doc_id long, cluster int"
-    )
+    # the k seed vectors come straight off the checkpoint (one SQL
+    # predicate: an isin() of k values costs k literal Column calls); the
+    # clusters are mapped on the driver
     centroids: dict[int, dict[str, float]] = {}
-    for row in (
-        docs_vec.join(F.broadcast(seed_ids), "doc_id")
-        .select("cluster", F.inline("entries"))
-        .collect()
-    ):
-        centroids.setdefault(row["cluster"], {})[row["word"]] = row["weight"]
+    for row in docs_vec.filter(f"doc_id IN ({', '.join(map(str, id2cluster))})").collect():
+        vec = centroids.setdefault(id2cluster[row["doc_id"]], {})
+        for e in row["entries"]:
+            vec[e["word"]] = e["weight"]
 
     limit = max_iter - 1 if parity_max_iter_off_by_one else max_iter
     history: list[dict[int, float]] = []
@@ -220,7 +226,8 @@ def kmeans(
 
     # the constant-centroid path parses centroid maps from JSON, whose keys
     # are strings; other word types take the join path
-    literal_words = isinstance(feats.schema["word"].dataType, T.StringType)
+    word_type = feats.schema["word"].dataType
+    literal_words = isinstance(word_type, T.StringType)
     # max_iter <= 1: the parity loop never runs, but one pass still assigns
     # every document to the seed centroids and measures their SSE
     for _ in range(max(limit, 1)):
@@ -236,9 +243,8 @@ def kmeans(
             # and cut lineage so plan depth stays O(1) across iterations
             best = _assign(spark, docs_vec, centroids).localCheckpoint(eager=True)
             assigned = best.join(docs_vec.select("doc_id", "entries"), "doc_id")
-        assignments = assigned.select("doc_id", "cluster", "dist2")
         sizes, sse, new_centroid_rows = _update(
-            assigned, len(centroids), max_centroid_entries
+            assigned, word_type, len(centroids), max_centroid_entries
         )
         if len(new_centroid_rows) > max_centroid_entries:
             raise RuntimeError(
@@ -268,7 +274,7 @@ def kmeans(
         centroids = new_centroids
 
     return KMeansResult(
-        assignments=assignments,
+        assignments=assigned.select("doc_id", "cluster", "dist2"),
         centroids=centroids,
         sse=sse,
         iterations=iterations,
@@ -1207,7 +1213,11 @@ def _assign_literal(
     over (dist2, cluster) structs — lexicographic struct ordering
     reproduces the min_by tie-break (lowest cluster on equal distance)
     exactly. JSON round-trips every double exactly (shortest-repr out,
-    correctly rounded parse in), so the weights match the driver's."""
+    correctly rounded parse in), so the weights match the driver's.
+
+    The pass is one SQL statement with the JSON bound as ``:centroids``:
+    building it costs 8 py4j round trips, against ~300 for the same
+    expression as Column calls."""
     consts = json.dumps(
         [
             {
@@ -1223,31 +1233,33 @@ def _assign_literal(
         ]
     )
 
-    def candidate(cent):
-        dot = F.aggregate(
-            F.col("entries"),
-            F.lit(0.0),
-            lambda acc, e: acc
-            + e["weight"] * F.coalesce(F.element_at(cent["cmap"], e["word"]), F.lit(0.0)),
-        )
-        dist2 = F.greatest(F.col("x2") + cent["c2"] - 2 * dot, F.lit(0.0))
-        return F.struct(dist2.alias("dist2"), cent["cluster"].alias("cluster"))
-
-    best = F.array_min(F.transform(F.from_json(F.lit(consts), _CENTROIDS_TYPE), candidate))
     # `best` is its own column so the distances are computed once per row,
     # not once per field read from it
-    return docs_vec.select("doc_id", "entries", best.alias("best")).select(
-        "doc_id", "entries", "best.cluster", "best.dist2"
+    return docs_vec.sparkSession.sql(
+        f"""
+        SELECT doc_id, entries, best.cluster AS cluster, best.dist2 AS dist2
+        FROM (
+          SELECT doc_id, entries, array_min(transform(
+            from_json(:centroids, '{_CENTROIDS_TYPE}'),
+            c -> named_struct(
+              'dist2', greatest(x2 + c.c2 - 2 * aggregate(
+                entries, 0D,
+                (acc, e) -> acc + e.weight * coalesce(element_at(c.cmap, e.word), 0D)), 0D),
+              'cluster', c.cluster))) AS best
+          FROM {{docs_vec}}
+        )""",
+        args={"centroids": consts},
+        docs_vec=docs_vec,
     )
 
 
 def _update(
-    assigned: DataFrame, n_clusters: int, max_entries: int
+    assigned: DataFrame, word_type: T.DataType, n_clusters: int, max_entries: int
 ) -> tuple[dict[int, int], dict[int, float], list]:
     """The update step of either assignment kernel: ONE aggregation over
     the assigned vectors (``cluster``, ``dist2`` and the document's
-    ``entries``), collected in one bounded job. Returns (sizes, SSE,
-    centroid-sum rows (cluster, word, wsum)).
+    ``entries``), one SQL statement collected in one bounded job. Returns
+    (sizes, SSE, centroid-sum rows (cluster, word, wsum)).
 
     Each document contributes its entries under (cluster, word) plus two
     sentinel entries with a NULL word: 1.0 under the key -1-2*cluster
@@ -1256,27 +1268,28 @@ def _update(
     collides with a sentinel, and the shuffle rows keep the width of the
     centroid sums (a count column would widen every row). Every sum runs
     over the same rows in the same order as separate aggregations would,
-    so the values are bit-identical to them."""
-    # the sentinel's NULL word takes the entries' word type: a string NULL
-    # would make concat coerce integer words to strings
-    word_type = assigned.schema["entries"].dataType.elementType["word"].dataType
-    no_word = F.lit(None).cast(word_type)
-    sentinels = F.array(
-        F.struct(no_word.alias("word"), F.lit(1.0).alias("weight")),
-        F.struct(no_word.alias("word"), F.col("dist2").alias("weight")),
-    )
-    c, pos = F.col("cluster"), F.col("pos")
-    rows = (
-        assigned.select("cluster", F.posexplode(F.concat(sentinels, "entries")).alias("pos", "e"))
-        .groupBy(
-            F.when(pos > 1, c).otherwise(-1 - 2 * c - pos).alias("cluster"),
-            F.col("e.word").alias("word"),
+    so the values are bit-identical to them. ``word_type`` is the entries'
+    word type, which the sentinels' NULL word takes: a string NULL would
+    make concat coerce integer words to strings."""
+    word = word_type.simpleString()
+    rows = assigned.sparkSession.sql(
+        f"""
+        SELECT CASE WHEN pos > 1 THEN cluster ELSE -1 - 2 * cluster - pos END AS cluster,
+               e.word AS word, sum(e.weight) AS wsum
+        FROM (
+          SELECT cluster, posexplode(concat(array(
+            named_struct('word', CAST(NULL AS {word}), 'weight', 1D),
+            named_struct('word', CAST(NULL AS {word}), 'weight', dist2)), entries)) AS (pos, e)
+          FROM {{assigned}}
         )
-        .agg(F.sum("e.weight").alias("wsum"))
-        # the guard counts centroid rows only: at most 2 sentinels a cluster
-        .limit(max_entries + 1 + 2 * n_clusters)
-        .collect()
-    )
+        GROUP BY 1, 2
+        -- the guard counts centroid rows only: at most 2 sentinels a cluster
+        LIMIT {max_entries + 1 + 2 * n_clusters}""",
+        # no parameters: an empty dict binds them in one round trip, None
+        # in four (an empty Java array)
+        args={},
+        assigned=assigned,
+    ).collect()
     sizes: dict[int, int] = {}
     sse: dict[int, float] = {}
     centroid_rows = []

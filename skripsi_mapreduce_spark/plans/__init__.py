@@ -14,14 +14,18 @@ from . import extensions3  # noqa: F401  (registers into QUERIES/ORACLE)
 #  (0) the five MinHash/n-gram dedup entries whose kernels were
 #      restructured this round (one copy of each cascade, band-join and
 #      verify step): dedup_minhash, dedup_ngram_jaccard,
-#      dedup_prefix_jaccard, dedup_group_keep, dedup_incremental;
+#      dedup_prefix_jaccard, dedup_group_keep, dedup_incremental; and
+#      mix_negatives, whose rank (etl.assign_sequential_ids, now one
+#      exchange) was rewritten — the rank's other two registry callers,
+#      etl_sequential_ids and q34_ntile, are in the fill already;
 #  (1) the eight kernels changed in r12 that have no driver-green row
 #      (kmeans_documents ... graph_components) plus sim_topk_many, the
 #      r9-green entry r12 deferred;
-#  (2) fill: dedup_simhash and 35 entries of the r9-green block (the
+#  (2) fill: dedup_simhash and 34 entries of the r9-green block (the
 #      stalest evidence before r12). The block's other nine entries,
 #      whose freshest rows are r12's, move to the tail so the head stays
-#      at exactly 50.
+#      at exactly 50, and so does range_join_pairs, the fill's last
+#      entry, to make room for mix_negatives; it leads the tail.
 #
 # Value-identical optimization touches stay in the tail under the r8/r11
 # precedent (row-identity pinned by the sf0.001 oracle suite every
@@ -30,8 +34,9 @@ from . import extensions3  # noqa: F401  (registers into QUERIES/ORACLE)
 # gets swapped in before round end.
 #
 # Freshness ledger after r13: head-50 carry r13 evidence; _TAIL lists
-# the r10-green entries, then the r11-green ones (the r11 head), then
-# the nine r12-green entries demoted from the r12 head.
+# range_join_pairs (r9-green), the r10-green entries, then the r11-green
+# ones (the r11 head), then the eight r12-green entries demoted from the
+# r12 head.
 _PROMOTED = [
     # (0) this round's restructured dedup kernels
     "dedup_minhash",
@@ -39,6 +44,7 @@ _PROMOTED = [
     "dedup_prefix_jaccard",
     "dedup_group_keep",
     "dedup_incremental",
+    "mix_negatives",
     # (1) r12-changed kernels without a driver-green row + sim_topk_many
     "kmeans_documents",
     "emb_kmeans",
@@ -85,9 +91,10 @@ _PROMOTED = [
     "mm_video_frames",
     "profile_lineitem",
     "skew_salted_agg",
-    "range_join_pairs",
 ]
 _TAIL = [
+    # green r9 — the stalest, first in line for the next head
+    "range_join_pairs",
     # green r10
     "ta_bm25_incremental",
     "sim_recall_many_ivfpq",
@@ -183,7 +190,6 @@ _TAIL = [
     "q45_apply_changes",
     "ta_bigram_lp",
     "q50_udtf_bigrams",
-    "mix_negatives",
     "q51_fuzzy_match",
     "stream_enrich",
     "q52_cube",

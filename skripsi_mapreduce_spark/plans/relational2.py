@@ -135,11 +135,12 @@ def q33(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q34(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed NTILE: no global single-partition window. Ranks come
     from the range-partitioned two-phase sequential-id operator
-    (etl.assign_sequential_ids — per-partition ROW_NUMBER + broadcast
-    partition offsets), and NTILE's uneven-bucket rule (SQL standard: the
+    (etl.assign_sequential_ids — a sort within each range partition, the
+    local rank read off monotonically_increasing_id, plus per-partition
+    offsets; one exchange), and NTILE's uneven-bucket rule (SQL standard: the
     first n%k buckets get one extra row) is plain arithmetic on the rank,
     so the plan has no Exchange SinglePartition anywhere. The row count
-    comes from a metadata-only parquet count."""
+    falls out of the rank's per-partition counts (``with_total``)."""
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     k = 4
     ranked, n_rows = assign_sequential_ids(

@@ -127,6 +127,83 @@ def _awkward_features(spark):
     return spark.createDataFrame(rows, "doc_id long, word string, weight double")
 
 
+def _assign_literal_columns(docs_vec, centroids):
+    """``kmeans._assign_literal`` in the Column-API form its SQL statement
+    replaced: the reference for the bit-equality check."""
+    import json
+
+    from skripsi_mapreduce_spark.operators import kmeans as km
+
+    consts = json.dumps(
+        [
+            {
+                "cluster": c,
+                "c2": float(sum(v * v for v in centroids[c].values())),
+                "cmap": {w: float(v) for w, v in centroids[c].items() if w is not None},
+            }
+            for c in sorted(centroids)
+        ]
+    )
+
+    def candidate(cent):
+        dot = F.aggregate(
+            F.col("entries"),
+            F.lit(0.0),
+            lambda acc, e: acc
+            + e["weight"] * F.coalesce(F.element_at(cent["cmap"], e["word"]), F.lit(0.0)),
+        )
+        dist2 = F.greatest(F.col("x2") + cent["c2"] - 2 * dot, F.lit(0.0))
+        return F.struct(dist2.alias("dist2"), cent["cluster"].alias("cluster"))
+
+    best = F.array_min(F.transform(F.from_json(F.lit(consts), km._CENTROIDS_TYPE), candidate))
+    return docs_vec.select("doc_id", "entries", best.alias("best")).select(
+        "doc_id", "entries", "best.cluster", "best.dist2"
+    )
+
+
+def _update_columns(assigned, word_type, n_clusters, max_entries):
+    """``kmeans._update`` in the Column-API form its SQL statement
+    replaced."""
+    no_word = F.lit(None).cast(word_type)
+    sentinels = F.array(
+        F.struct(no_word.alias("word"), F.lit(1.0).alias("weight")),
+        F.struct(no_word.alias("word"), F.col("dist2").alias("weight")),
+    )
+    c, pos = F.col("cluster"), F.col("pos")
+    rows = (
+        assigned.select("cluster", F.posexplode(F.concat(sentinels, "entries")).alias("pos", "e"))
+        .groupBy(
+            F.when(pos > 1, c).otherwise(-1 - 2 * c - pos).alias("cluster"),
+            F.col("e.word").alias("word"),
+        )
+        .agg(F.sum("e.weight").alias("wsum"))
+        .limit(max_entries + 1 + 2 * n_clusters)
+        .collect()
+    )
+    sizes, sse, centroid_rows = {}, {}, []
+    for r in rows:
+        key = r["cluster"]
+        if key >= 0:
+            centroid_rows.append(r)
+        elif key % 2:
+            sizes[(-1 - key) // 2] = int(r["wsum"])
+        else:
+            sse[(-2 - key) // 2] = r["wsum"]
+    return sizes, sse, centroid_rows
+
+
+def _result_bits(res):
+    """Everything a kmeans() result holds, floats as their exact bits."""
+    return (
+        sorted((r["doc_id"], r["cluster"], r["dist2"].hex()) for r in res.assignments.collect()),
+        {c: {w: v.hex() for w, v in vec.items()} for c, vec in res.centroids.items()},
+        {c: v.hex() for c, v in res.sse.items()},
+        [{c: v.hex() for c, v in h.items()} for h in res.history],
+        res.iterations,
+        res.converged,
+    )
+
+
 def test_kmeans_literal_path_matches_join_path(spark, monkeypatch):
     """The constant-centroid assignment ships words and weights through a
     JSON constant; the broadcast-join path ships them as a table. Both must
@@ -136,6 +213,7 @@ def test_kmeans_literal_path_matches_join_path(spark, monkeypatch):
     from skripsi_mapreduce_spark.operators import kmeans as km
 
     feats = _awkward_features(spark)
+    literal_cap = km.CENTROID_LITERAL_CAP
     lit = kmeans(spark, feats, k=3, max_iter=6, seed=7)
     monkeypatch.setattr(km, "CENTROID_LITERAL_CAP", 0)  # every iteration joins
     join = kmeans(spark, feats, k=3, max_iter=6, seed=7)
@@ -154,6 +232,17 @@ def test_kmeans_literal_path_matches_join_path(spark, monkeypatch):
         assert hl.keys() == hj.keys()
         for c in hl:
             assert hl[c] == pytest.approx(hj[c], rel=1e-9)
+
+    # Each iteration step is one SQL statement; on both kernels the result
+    # is bit-identical to the Column-API form of the same steps: centroids,
+    # SSE, history, iterations and every assignment's dist2.
+    for cap, res in ((0, join), (literal_cap, lit)):
+        monkeypatch.setattr(km, "CENTROID_LITERAL_CAP", cap)
+        with monkeypatch.context() as m:
+            m.setattr(km, "_assign_literal", _assign_literal_columns)
+            m.setattr(km, "_update", _update_columns)
+            ref = kmeans(spark, feats, k=3, max_iter=6, seed=7)
+        assert _result_bits(res) == _result_bits(ref)
 
 
 def test_kmeans_non_string_words_match_string_words(spark, features, monkeypatch):

@@ -343,6 +343,37 @@ def test_fixedpoint_kernel_job_count(spark, kernel, jobs):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
 
 
+@pytest.mark.parametrize("ids, jobs", [("dense", 15), ("sparse", 20)])
+def test_kmeans_job_count(spark, ids, jobs):
+    """Job-count budget for the thesis kmeans() (k=5, 5 iterations of two
+    jobs each) plus one count() of its assignments, on TF-IDF features
+    whose ids are dense 1..N and on a sparse subset, whose seed pick ranks
+    the ids. The seeds are read off the checkpointed vectors without a
+    broadcast join, and the rank crosses one exchange."""
+    from pyspark.sql import functions as F
+
+    from skripsi_mapreduce_spark.io import load_table
+    from skripsi_mapreduce_spark.operators.kmeans import kmeans
+    from skripsi_mapreduce_spark.operators.tfidf import tfidf_long
+
+    feats = tfidf_long(load_table(spark, SF_DIR, "documents")).withColumn(
+        "doc_id", F.col("doc_id") + 1
+    )
+    if ids == "sparse":
+        feats = feats.filter(F.col("doc_id") % 3 != 0)
+    feats = feats.localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    group = f"kmeans-job-count-{ids}"
+    sc.setJobGroup(group, "kmeans job-count gate")
+    try:
+        res = kmeans(spark, feats, k=5, max_iter=6, seed=42)
+        res.assignments.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res.iterations == 5
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+
+
 def test_incremental_kernel_job_count(spark):
     """Job-count budget for one minhash_near_dups_against call (the
     per-batch call the ingest benchmark repeats): the dictionary collect,

@@ -120,6 +120,55 @@ def test_assign_sequential_ids(spark):
         assert expect[(a, rv)] == i
 
 
+_TIED = [(i % 5, f"w{(i * 7) % 23:02d}") for i in range(23)]
+_NULLS = [(None if i % 4 == 0 else i % 3, f"w{i:02d}") for i in range(17)]
+
+
+@pytest.mark.parametrize(
+    "rows, desc, num_partitions",
+    [
+        (_TIED, True, 4),  # tfidf_long(max_features=)'s (df desc, word) form
+        (_NULLS, False, 3),  # ascending puts null keys first
+        (_NULLS, True, 3),  # descending puts them last
+        (_TIED[:5], False, 16),  # empty range partitions
+        ([], False, 4),
+        ([(1, "only")], False, 4),
+    ],
+    ids=["desc-tiebreak", "nulls-asc", "nulls-desc", "partitions-gt-rows", "empty", "one-row"],
+)
+def test_assign_sequential_ids_matches_sorted_enumerate(spark, rows, desc, num_partitions):
+    """The rank equals a Python sorted-enumerate, keeps the int id type
+    and plans no Window and no Exchange: the rows cross the range
+    partitioning once, inside the checkpoint, and a row's local rank is
+    its position in its sorted partition."""
+    import re
+
+    from pyspark.sql import types as T
+
+    df = spark.createDataFrame(rows, "k int, w string")
+    key = F.col("k").desc() if desc else F.col("k")
+    out, n = assign_sequential_ids(
+        df, [key, F.col("w")], num_partitions=num_partitions, with_total=True
+    )
+    assert out.schema["id"].dataType == T.IntegerType()
+
+    def sort_key(r):
+        k = r[0]
+        if desc:  # DESC: nulls last
+            return (k is None, -(k or 0), r[1])
+        return (k is not None, k or 0, r[1])  # ASC: nulls first
+
+    expect = [(k, w, i + 1) for i, (k, w) in enumerate(sorted(rows, key=sort_key))]
+    got = sorted(((r["k"], r["w"], r["id"]) for r in out.collect()), key=lambda t: t[2])
+    assert got == expect
+    assert n == len(rows)
+    plan = out._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    assert not re.search(r"\bWindow\b", plan), plan
+    assert not re.search(r"\bExchange\b", plan), plan
+
+
 def test_extract_transform_end_to_end(spark, tmp_path):
     import json
 
